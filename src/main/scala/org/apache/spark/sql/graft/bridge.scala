@@ -13,8 +13,8 @@ object Bridge {
   def toExpr(c: Column): Expression = ExpressionUtils.expression(c)
   def toCol(e: Expression): Column = ExpressionUtils.column(e)
 
-  /** Execute an arbitrary LogicalPlan as a DataFrame (for testing plan
-    * rewrites). */
+  /** Execute an arbitrary LogicalPlan as a DataFrame (TableMemo's fresh
+    * relation instances; plan-rewrite tests). */
   def planToDf(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.DataFrame =

@@ -80,6 +80,34 @@ class StagingSpec extends SparkTestBase {
     }
   }
 
+  test("staging refuses a corpus whose cuts are too close for the " +
+      "no-data-batch skip (cut2 - cut1 must exceed 1 h delay + 30 min)") {
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("graft-stage-narrow")
+    val src = dir.resolve("events.parquet")
+    // a 4-hour corpus: cut2 - cut1 = a quarter of the span = 1 h
+    spark.read.parquet(s"$sf0001/events.parquet")
+      .limit(50)
+      .withColumn("ts", lit(1700000000000000000L) +
+        (col("event_id") % 5) * lit(3600000000000L))
+      .coalesce(1).write.mode("overwrite").parquet(src.toString)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        graft.queries.Streaming.stageEventsMulti(spark, dir.toString)
+      }
+      assert(e.getMessage.contains("no-data-batch skip"), e.getMessage)
+    } finally {
+      val root = Paths.get("/tmp/graft_stream_stage")
+      if (Files.isDirectory(root)) {
+        val st = Files.list(root)
+        try st.toArray.map(_.asInstanceOf[java.nio.file.Path])
+            .filter(_.toString.contains(dir.getFileName.toString))
+            .foreach(graft.queries.Streaming.deleteRecursively)
+        finally st.close()
+      }
+    }
+  }
+
   // The retired unordered-sentinel staging spelling (r16's first Append
   // draft — sentinels without the ordered split) is now UNREPRESENTABLE:
   // stageEventsMulti takes one `sessionGate` flag covering both, so no

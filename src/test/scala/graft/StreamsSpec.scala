@@ -177,6 +177,40 @@ class StreamsSpec extends SparkTestBase {
     assert(years.head.getInt(0) === 2024)
   }
 
+  test("the stream schema probe re-probes a regenerated source that is not " +
+      "a listable directory, and one whose parts are nested") {
+    val base = java.nio.file.Files.createTempDirectory("graft_stream_reprobe")
+    val v1 = Seq((1L, 1700000000000000000L, 7L, "click", 1.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val v2 = v1.withColumn("props", lit("x"))
+    // a single parquet FILE as the source: it cannot be listed as a
+    // directory, yet a batch read of it works
+    val file = base.resolve("events.parquet")
+    def writeFile(df: org.apache.spark.sql.DataFrame, mtime: Long): Unit = {
+      val tmp = base.resolve("tmpdir")
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = java.nio.file.Files.list(tmp).toArray
+        .map(_.asInstanceOf[java.nio.file.Path])
+        .find(_.toString.endsWith(".parquet")).get
+      java.nio.file.Files.move(part, file,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      file.toFile.setLastModified(mtime)
+    }
+    writeFile(v1, 1700000000000L)
+    assert(!Streams.eventStream(spark, file.toString).columns.contains("props"))
+    writeFile(v2, 1700000060000L)
+    assert(Streams.eventStream(spark, file.toString).columns.contains("props"),
+      "a regenerated single-file source kept its first schema")
+    // part files one level down (partitioned layout): only the nested
+    // files change on regeneration, not the top-level entries
+    val nested = base.resolve("nested").toString
+    v1.write.partitionBy("event_type").parquet(nested)
+    assert(!Streams.eventStream(spark, nested).columns.contains("props"))
+    v2.write.mode("overwrite").partitionBy("event_type").parquet(nested)
+    assert(Streams.eventStream(spark, nested).columns.contains("props"),
+      "a regenerated nested-part source kept its first schema")
+  }
+
   // ---- multi-file replay semantics the multi-batch parity gates rely on --
 
   /** Write one events parquet file (nanos-long ts, the testdata layout)

@@ -1,5 +1,6 @@
 package graft.expressions;
 
+import org.apache.spark.unsafe.Platform;
 import org.apache.spark.unsafe.types.UTF8String;
 
 /**
@@ -11,9 +12,100 @@ import org.apache.spark.unsafe.types.UTF8String;
  * the reference's Numba kernels in fletcher/algorithms/string.py do the same
  * work per Arrow chunk; here Tungsten hands us one UTF8String per row inside
  * generated code, which is the Spark-native shape of the same loop.
+ *
+ * BYTE CONTRACT: like the reference's loops over raw Arrow UTF-8 buffers,
+ * the per-row kernels read the UTF-8 bytes. countLiteral and replaceN are
+ * byte-level for every input; swapCase, caseFold, sliceCodepoints,
+ * rfindLiteral, polyHash, normalize and the nine is* predicates take a
+ * byte path when every byte is ASCII ({@link #isAscii}), so an ASCII row
+ * never becomes a java.lang.String (one byte is one codepoint, and the
+ * character classes come from {@link #ASCII_CLASS}). A row with any
+ * non-ASCII byte takes the codepoint path (the package-private *Cp
+ * methods), which is also the reference the ASCII paths are
+ * property-tested against.
  */
 public final class StringKernels {
     private StringKernels() {}
+
+    // ---- per-byte character classes for 0x00-0x7F, built once from the
+    // same java.lang.Character predicates the codepoint paths call, so the
+    // two paths cannot drift apart ----
+    private static final int ALPHA = 1, DIGIT = 1 << 1, ALNUM = 1 << 2,
+        SPACE = 1 << 3, UPPER = 1 << 4, LOWER = 1 << 5, NUMERIC = 1 << 6,
+        DECIMAL = 1 << 7;
+    private static final int[] ASCII_CLASS = new int[128];
+    /** XOR masks that swap case / fold to lower case: an ASCII letter's
+     *  two cases differ in bit 0x20 only. */
+    private static final byte[] SWAP_XOR = new byte[128], FOLD_XOR = new byte[128];
+    static {
+        for (int c = 0; c < 128; c++) {
+            int k = 0;
+            if (Character.isLetter(c)) k |= ALPHA;
+            if (Character.isDigit(c)) k |= DIGIT;
+            if (Character.isLetterOrDigit(c)) k |= ALNUM;
+            if (cpIsSpace(c)) k |= SPACE;
+            if (cpIsUpperOrTitle(c)) k |= UPPER;
+            if (Character.isLowerCase(c)) k |= LOWER;
+            if (cpIsNumeric(c)) k |= NUMERIC;
+            if (cpIsDecimal(c)) k |= DECIMAL;
+            ASCII_CLASS[c] = k;
+            SWAP_XOR[c] = (byte) ((k & (UPPER | LOWER)) != 0 ? 0x20 : 0);
+            FOLD_XOR[c] = (byte) ((k & UPPER) != 0 ? 0x20 : 0);
+        }
+    }
+
+    private static boolean cpIsSpace(int cp) {
+        return Character.isWhitespace(cp) || Character.isSpaceChar(cp);
+    }
+
+    private static boolean cpIsUpperOrTitle(int cp) {
+        return Character.isUpperCase(cp) || Character.isTitleCase(cp);
+    }
+
+    private static boolean cpIsNumeric(int cp) {
+        int t = Character.getType(cp);
+        return Character.isDigit(cp) || t == Character.LETTER_NUMBER
+            || t == Character.OTHER_NUMBER;
+    }
+
+    private static boolean cpIsDecimal(int cp) {
+        return Character.getType(cp) == Character.DECIMAL_DIGIT_NUMBER;
+    }
+
+    /**
+     * Every byte < 0x80: the answer of {@link UTF8String#isFullAscii()},
+     * read 8 bytes at a time. isFullAscii() reads one byte per call, which
+     * on a 256-byte row costs more than decoding the row to a String.
+     */
+    static boolean isAscii(UTF8String str) {
+        if (!Platform.unaligned()) return str.isFullAscii();
+        Object base = str.getBaseObject();
+        long at = str.getBaseOffset(), end = at + str.numBytes(), bits = 0;
+        for (; at + 8 <= end; at += 8) bits |= Platform.getLong(base, at);
+        for (; at < end; at++) bits |= Platform.getByte(base, at);
+        return (bits & 0x8080808080808080L) == 0;
+    }
+
+    /** An all-ASCII string with every byte XORed with its mask. */
+    private static UTF8String xorAscii(UTF8String str, byte[] mask) {
+        // a copy: getBytes() may return the string's own backing array
+        byte[] b = new byte[str.numBytes()];
+        str.writeToMemory(b, Platform.BYTE_ARRAY_OFFSET);
+        for (int i = 0; i < b.length; i++) b[i] ^= mask[b[i]];
+        return UTF8String.fromBytes(b);
+    }
+
+    /** Class bits of byte i of an all-ASCII string. */
+    private static int asciiClass(UTF8String str, int i) {
+        return ASCII_CLASS[str.getByte(i)];
+    }
+
+    /** Non-empty and every byte of an all-ASCII string carries bit. */
+    private static boolean allAscii(UTF8String str, int bit) {
+        int n = str.numBytes(), all = bit;
+        for (int i = 0; i < n; i++) all &= asciiClass(str, i);
+        return n > 0 && all != 0;
+    }
 
     /** KMP failure table over pattern bytes (fail[i] = length of the longest
      *  proper border of p[0..i]). O(m) build, shared by count/replace. */
@@ -127,17 +219,34 @@ public final class StringKernels {
     public static UTF8String sliceCodepoints(UTF8String str, int start,
                                              int end, int step) {
         if (step == 0) throw new IllegalArgumentException("slice step cannot be zero");
+        if (!isAscii(str)) return sliceCodepointsCp(str, start, end, step);
+        int len = str.numBytes();
+        long b = sliceStart(len, start, step), e = sliceEnd(len, end, step);
+        long n = step > 0 ? (e - b + step - 1) / step : (b - e - step - 1) / -step;
+        byte[] out = new byte[(int) Math.max(n, 0)];
+        for (int j = 0; j < out.length; j++) out[j] = str.getByte((int) (b + (long) j * step));
+        return UTF8String.fromBytes(out);
+    }
+
+    /** First index a Python slice visits over len items. */
+    private static long sliceStart(int len, int start, int step) {
+        if (step > 0) return start == Integer.MIN_VALUE ? 0 : (start < 0 ? Math.max(len + start, 0) : Math.min(start, len));
+        return start == Integer.MIN_VALUE ? len - 1 : (start < 0 ? Math.max(len + start, -1) : Math.min(start, len - 1));
+    }
+
+    /** Exclusive stop index of a Python slice over len items. */
+    private static long sliceEnd(int len, int end, int step) {
+        if (step > 0) return end == Integer.MIN_VALUE ? len : (end < 0 ? Math.max(len + end, 0) : Math.min(end, len));
+        return end == Integer.MIN_VALUE ? -1 : (end < 0 ? Math.max(len + end, -1) : Math.min(end, len - 1));
+    }
+
+    /** Codepoint path of {@link #sliceCodepoints}; step != 0. */
+    static UTF8String sliceCodepointsCp(UTF8String str, int start, int end,
+                                        int step) {
         String s = str.toString();
         int[] cps = s.codePoints().toArray();
         int len = cps.length;
-        long b, e;
-        if (step > 0) {
-            b = start == Integer.MIN_VALUE ? 0 : (start < 0 ? Math.max(len + start, 0) : Math.min(start, len));
-            e = end == Integer.MIN_VALUE ? len : (end < 0 ? Math.max(len + end, 0) : Math.min(end, len));
-        } else {
-            b = start == Integer.MIN_VALUE ? len - 1 : (start < 0 ? Math.max(len + start, -1) : Math.min(start, len - 1));
-            e = end == Integer.MIN_VALUE ? -1 : (end < 0 ? Math.max(len + end, -1) : Math.min(end, len - 1));
-        }
+        long b = sliceStart(len, start, step), e = sliceEnd(len, end, step);
         StringBuilder out = new StringBuilder();
         if (step > 0) {
             for (long i = b; i < e; i += step) out.appendCodePoint(cps[(int) i]);
@@ -149,34 +258,63 @@ public final class StringKernels {
 
     // ---- Unicode class predicates (Python str.is* semantics; the reference
     // delegates to Arrow utf8proc, string_mixin.py:38-91). Empty string →
-    // false for all, matching Python/pandas. ----
+    // false for all, matching Python/pandas. Each public predicate reads an
+    // all-ASCII string through ASCII_CLASS and otherwise takes its *Cp
+    // codepoint path. ----
 
     public static boolean isAlpha(UTF8String str) {
+        return isAscii(str) ? allAscii(str, ALPHA) : isAlphaCp(str);
+    }
+
+    static boolean isAlphaCp(UTF8String str) {
         String s = str.toString();
         if (s.isEmpty()) return false;
         return s.codePoints().allMatch(Character::isLetter);
     }
 
     public static boolean isDigit(UTF8String str) {
+        return isAscii(str) ? allAscii(str, DIGIT) : isDigitCp(str);
+    }
+
+    static boolean isDigitCp(UTF8String str) {
         String s = str.toString();
         if (s.isEmpty()) return false;
         return s.codePoints().allMatch(Character::isDigit);
     }
 
     public static boolean isAlnum(UTF8String str) {
+        return isAscii(str) ? allAscii(str, ALNUM) : isAlnumCp(str);
+    }
+
+    static boolean isAlnumCp(UTF8String str) {
         String s = str.toString();
         if (s.isEmpty()) return false;
         return s.codePoints().allMatch(Character::isLetterOrDigit);
     }
 
     public static boolean isSpace(UTF8String str) {
+        return isAscii(str) ? allAscii(str, SPACE) : isSpaceCp(str);
+    }
+
+    static boolean isSpaceCp(UTF8String str) {
         String s = str.toString();
         if (s.isEmpty()) return false;
-        return s.codePoints().allMatch(
-            cp -> Character.isWhitespace(cp) || Character.isSpaceChar(cp));
+        return s.codePoints().allMatch(StringKernels::cpIsSpace);
+    }
+
+    /** Python islower/isupper of an all-ASCII string: no character of the
+     *  opposite case and at least one of the wanted case. */
+    private static boolean isOneCaseAscii(UTF8String str, int want, int opposite) {
+        int any = 0;
+        for (int i = 0, n = str.numBytes(); i < n; i++) any |= asciiClass(str, i);
+        return (any & opposite) == 0 && (any & want) != 0;
     }
 
     public static boolean isLower(UTF8String str) {
+        return isAscii(str) ? isOneCaseAscii(str, LOWER, UPPER) : isLowerCp(str);
+    }
+
+    static boolean isLowerCp(UTF8String str) {
         String s = str.toString();
         boolean cased = false;
         for (int i = 0; i < s.length();) {
@@ -189,6 +327,11 @@ public final class StringKernels {
     }
 
     public static boolean isUpper(UTF8String str) {
+        // ASCII has no title-case letter, so UPPER alone is the wanted case
+        return isAscii(str) ? isOneCaseAscii(str, UPPER, LOWER) : isUpperCp(str);
+    }
+
+    static boolean isUpperCp(UTF8String str) {
         String s = str.toString();
         boolean cased = false;
         for (int i = 0; i < s.length();) {
@@ -202,6 +345,24 @@ public final class StringKernels {
 
     /** Python istitle: cased runs must start upper/title then lower. */
     public static boolean isTitle(UTF8String str) {
+        if (!isAscii(str)) return isTitleCp(str);
+        boolean cased = false, prevCased = false;
+        for (int i = 0, n = str.numBytes(); i < n; i++) {
+            int k = asciiClass(str, i);
+            if ((k & UPPER) != 0) {
+                if (prevCased) return false;
+                cased = true; prevCased = true;
+            } else if ((k & LOWER) != 0) {
+                if (!prevCased) return false;
+                cased = true; prevCased = true;
+            } else {
+                prevCased = false;
+            }
+        }
+        return cased;
+    }
+
+    static boolean isTitleCp(UTF8String str) {
         String s = str.toString();
         boolean cased = false, prevCased = false;
         for (int i = 0; i < s.length();) {
@@ -224,38 +385,50 @@ public final class StringKernels {
 
     /** Python isnumeric: digits + numeric category (Nl, No). */
     public static boolean isNumeric(UTF8String str) {
+        return isAscii(str) ? allAscii(str, NUMERIC) : isNumericCp(str);
+    }
+
+    static boolean isNumericCp(UTF8String str) {
         String s = str.toString();
         if (s.isEmpty()) return false;
-        return s.codePoints().allMatch(cp -> {
-            int t = Character.getType(cp);
-            return Character.isDigit(cp) || t == Character.LETTER_NUMBER
-                || t == Character.OTHER_NUMBER;
-        });
+        return s.codePoints().allMatch(StringKernels::cpIsNumeric);
     }
 
     /** Python isdecimal: Nd only. */
     public static boolean isDecimal(UTF8String str) {
+        return isAscii(str) ? allAscii(str, DECIMAL) : isDecimalCp(str);
+    }
+
+    static boolean isDecimalCp(UTF8String str) {
         String s = str.toString();
         if (s.isEmpty()) return false;
-        return s.codePoints().allMatch(
-            cp -> Character.getType(cp) == Character.DECIMAL_DIGIT_NUMBER);
+        return s.codePoints().allMatch(StringKernels::cpIsDecimal);
     }
 
     /**
      * Unicode case folding (Python str.casefold flavor). The upper→lower
      * round-trip handles the full-fold expansions (ß→SS→ss) that plain
-     * toLowerCase misses.
+     * toLowerCase misses; on ASCII it is plain lower-casing (by table:
+     * UTF8String.toLowerCaseAscii() calls a boxed Character function per
+     * byte and measured 3x slower on 256-byte rows).
      */
     public static UTF8String caseFold(UTF8String str) {
+        return isAscii(str) ? xorAscii(str, FOLD_XOR) : caseFoldCp(str);
+    }
+
+    static UTF8String caseFoldCp(UTF8String str) {
         String s = str.toString();
         return UTF8String.fromString(
             s.toUpperCase(java.util.Locale.ROOT).toLowerCase(java.util.Locale.ROOT));
     }
 
-    /** Unicode normalization via java.text.Normalizer (NFC/NFD/NFKC/NFKD). */
-    public static UTF8String normalize(UTF8String str, UTF8String form) {
-        return UTF8String.fromString(java.text.Normalizer.normalize(
-            str.toString(), java.text.Normalizer.Form.valueOf(form.toString())));
+    /** Unicode normalization via java.text.Normalizer (NFC/NFD/NFKC/NFKD).
+     *  ASCII is invariant under all four forms, so it is returned as is. */
+    public static UTF8String normalize(UTF8String str,
+                                       java.text.Normalizer.Form form) {
+        if (isAscii(str)) return str;
+        return UTF8String.fromString(
+            java.text.Normalizer.normalize(str.toString(), form));
     }
 
     /**
@@ -307,6 +480,22 @@ public final class StringKernels {
      * tests/test_text.py:605 — rindex shares these semantics).
      */
     public static int rfindLiteral(UTF8String str, UTF8String sub) {
+        if (!isAscii(str)) return rfindLiteralCp(str, sub);
+        // byte index == codepoint index; a non-ASCII sub has a byte >= 0x80
+        // and so never matches
+        int m = sub.numBytes();
+        if (m == 0) return str.numBytes();
+        byte first = sub.getByte(0);
+        for (int i = str.numBytes() - m; i >= 0; i--) {
+            if (str.getByte(i) != first) continue;
+            int j = 1;
+            while (j < m && str.getByte(i + j) == sub.getByte(j)) j++;
+            if (j == m) return i;
+        }
+        return -1;
+    }
+
+    static int rfindLiteralCp(UTF8String str, UTF8String sub) {
         String s = str.toString();
         String p = sub.toString();
         int idx = s.lastIndexOf(p);
@@ -388,6 +577,10 @@ public final class StringKernels {
      * case conversion per codepoint. (reference tests/test_text.py:773)
      */
     public static UTF8String swapCase(UTF8String str) {
+        return isAscii(str) ? xorAscii(str, SWAP_XOR) : swapCaseCp(str);
+    }
+
+    static UTF8String swapCaseCp(UTF8String str) {
         String s = str.toString();
         StringBuilder out = new StringBuilder(s.length());
         for (int i = 0; i < s.length();) {
@@ -414,6 +607,18 @@ public final class StringKernels {
     public static final long POLY_MOD = 1_000_000_007L;
 
     public static long polyHash(UTF8String str) {
+        if (!isAscii(str)) return polyHashCp(str);
+        // reducing every 6 steps gives the same residue as every step: from
+        // h < POLY_MOD < 2^30, six steps of h*31 + byte stay below 2^60
+        long h = 0;
+        for (int i = 0, n = str.numBytes(); i < n;) {
+            for (int end = Math.min(n, i + 6); i < end; i++) h = h * 31 + str.getByte(i);
+            h %= POLY_MOD;
+        }
+        return h;
+    }
+
+    static long polyHashCp(UTF8String str) {
         String s = str.toString();
         long h = 0;
         for (int i = 0; i < s.length();) {

@@ -118,18 +118,21 @@ public final class VectorKernels {
    * bit b is set iff the ±1 vote sum over elements is &gt; 0, where a null
    * element votes −1 (the fold's otherwise branch) and a NULL ARRAY yields
    * 0 (every per-bit when() falls to otherwise(0) when the fold is null —
-   * which is why the expression is non-nullable and this takes null). */
+   * which is why the expression is non-nullable and this takes null).
+   * One pass over the elements counts the set bits per position, so bit
+   * b's vote sum is ones[b] − (n − ones[b]) = 2·ones[b] − n. */
   public static long simHash30(ArrayData h) {
     if (h == null) return 0L;
     int n = h.numElements();
+    int[] ones = new int[30];
+    for (int i = 0; i < n; i++) {
+      if (h.isNullAt(i)) continue;
+      long x = h.getLong(i);
+      for (int b = 0; b < 30; b++) ones[b] += (int) ((x >> b) & 1L);
+    }
     long out = 0L;
     for (int b = 0; b < 30; b++) {
-      long s = 0L;
-      for (int i = 0; i < n; i++) {
-        if (!h.isNullAt(i) && (((h.getLong(i) >> b) & 1L) == 1L)) s += 1L;
-        else s -= 1L;
-      }
-      if (s > 0L) out += (1L << b);
+      if (2L * ones[b] - n > 0L) out += (1L << b);
     }
     return out;
   }

@@ -12,6 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[StringKernels]]) so it stays inside whole-stage codegen — an
   * eval-only Expression would break the codegen span and serialize the
   * hot path (SURVEY.md §7.5 risk 5).
+  *
+  * Byte contract (see [[StringKernels]]): the kernels receive the row's
+  * UTF8String as is. An all-ASCII row is processed on its UTF-8 bytes and
+  * never becomes a java.lang.String; a row with any non-ASCII byte takes
+  * the kernel's codepoint path.
   */
 
 /** Non-overlapping literal substring count; empty pattern → numChars+1
@@ -104,13 +109,14 @@ case class CaseFold(child: Expression) extends UnaryExpression {
 case class NormalizeText(child: Expression, form: String)
     extends UnaryExpression {
   require(Set("NFC", "NFD", "NFKC", "NFKD")(form), s"bad form: $form")
+  // resolved once per expression; generated code names the enum constant
+  private val normForm = java.text.Normalizer.Form.valueOf(form)
   override def dataType: DataType = StringType
   override def nullSafeEval(str: Any): Any =
-    StringKernels.normalize(str.asInstanceOf[UTF8String],
-      UTF8String.fromString(form))
+    StringKernels.normalize(str.asInstanceOf[UTF8String], normForm)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, s =>
-      s"""graft.expressions.StringKernels.normalize($s, org.apache.spark.unsafe.types.UTF8String.fromString("$form"))""")
+      s"graft.expressions.StringKernels.normalize($s, java.text.Normalizer.Form.$form)")
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 

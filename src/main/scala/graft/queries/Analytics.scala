@@ -26,6 +26,70 @@ object Analytics {
   private def isum(c: Column): Column =
     sum(c.cast(DecimalType(38, 0))).cast("double")
 
+  private def dec(c: Column): Column = c.cast(DecimalType(38, 0))
+
+  /** Spearman rho per `l_returnflag` of `d`'s (xi, yi) pairs, where each
+    * row of `d` stands for `w` identical rows (q_spearman's rows are
+    * single, w = 1).
+    *
+    * Plan shape (r20, guide §2.3/§2.4 — aggregate before you shuffle):
+    * ONE row-level join total, the broadcast of the tiny quantity-rank
+    * map. The r18→r19 plan attached BOTH rank maps to every fact row (the
+    * price map — one row per distinct price ≈ the row count — via a
+    * shuffled-hash join) and aggregated the joined rows. But every power
+    * sum is computable from the per-(flag, yi) VALUE-COUNT table once it
+    * carries the xi-rank partials: Σrows rx = Σgroups srx, Σrows ry =
+    * Σgroups c·ry, Σrows rx·ry = Σgroups ry·srx — exact integer
+    * identities, so the six sums (and hence rho) are bit-identical to the
+    * row-level spelling while the price-side row join, its exchange of
+    * the whole fact table by (flag, yi), and the row-count-sized
+    * aggregate input all disappear. `d` itself is NOT persisted: it is
+    * two cheap narrow parquet scans (the r19 withGlobalPos measurement:
+    * caching cheap scans costs more than the rescan); the expensive
+    * aggregate `g` is persisted inside groupedPrefixSum (split points /
+    * offsets / window — 3 consumers, via the bounded OpCaches registry).
+    *
+    * Magnitudes, for N rows in a group and a tie group of c rows: a
+    * doubled rank is ≤ 2N, and srx (c ranks) ≤ 2cN, a LONG while
+    * c·N < 4.6·10¹⁸. The products rx·rx, c·ry, c·ry·ry and srx·ry and
+    * their sums reach c·(2N)², past 2⁶³ (an ANSI overflow error) from
+    * 1.5·10⁹ rows, sooner with a large tie group; they are taken in
+    * DECIMAL(38,0), exact while 4N³ < 10³⁸. */
+  private[graft] def spearmanRho(d: DataFrame): DataFrame = {
+    // average ranks (doubled → exact integers) from grouped value
+    // counts: r2 = 2·|smaller| + ties + 1, via the distributed prefix
+    // sum — no per-group full-table window anywhere.
+    def ranksOf(counted: DataFrame, v: String, r: String): DataFrame =
+      Positional.groupedPrefixSum(counted, Seq("l_returnflag"),
+          Seq(col(v)), col("c"), "cum")
+        .withColumn(r,
+          lit(2L) * (col("cum") - col("c")) + col("c") + lit(1L))
+    // ~50 distinct quantity-cents values per flag — broadcast-safe at
+    // any scale (guide §3.1: the r18 plan auto-broadcast the full fact
+    // projection instead; pin the genuinely tiny side).
+    val rx = ranksOf(
+      d.groupBy(col("l_returnflag"), col("xi"))
+        .agg(sum(col("w")).as("c")), "xi", "rx")
+      .select(col("l_returnflag"), col("xi"), col("rx"))
+    // value-count table over yi, carrying the xi-rank partials
+    val g = d.join(broadcast(rx), Seq("l_returnflag", "xi"))
+      .groupBy(col("l_returnflag"), col("yi"))
+      .agg(sum(col("w")).as("c"), sum(col("w") * col("rx")).as("srx"),
+        sum(dec(col("w")) * dec(col("rx")) * dec(col("rx"))).as("srxx"))
+    ranksOf(g, "yi", "ry")
+      .groupBy(col("l_returnflag"))
+      .agg(sum(col("c")).cast("double").as("n"),
+        isum(col("srx")).as("sx"), isum(dec(col("c")) * dec(col("ry"))).as("sy"),
+        isum(col("srxx")).as("sxx"),
+        isum(dec(col("c")) * dec(col("ry")) * dec(col("ry"))).as("syy"),
+        isum(dec(col("srx")) * dec(col("ry"))).as("sxy"))
+      .select(col("l_returnflag"),
+        ((col("sxy") - col("sx") * col("sy") / col("n")) /
+          (sqrt(col("sxx") - col("sx") * col("sx") / col("n")) *
+            sqrt(col("syy") - col("sy") * col("sy") / col("n"))))
+          .as("rho"))
+  }
+
   val defs: Map[String, Q] = Map(
     // Per-column corpus profile (deequ/describe shape): row count, nulls,
     // exact distinct, min/max — one parquet-pruned aggregate per column
@@ -87,69 +151,15 @@ object Analytics {
     // BIGINT even for tied values: r2 = 2·|smaller| + ties + 1) from
     // grouped value counts + the distributed prefix sum — NO per-group
     // full-table window anywhere — then Pearson on the integer ranks via
-    // the q_corr decimal machinery. rho is scale-invariant, so the rank
-    // doubling cancels. (Rank products stay < 2⁶³ up to ~3·10⁹ rows per
-    // group; past that, cast ranks to DECIMAL before squaring.)
+    // the q_corr decimal machinery (see [[spearmanRho]]). rho is
+    // scale-invariant, so the rank doubling cancels.
     "q_spearman" -> Q(
-      (s, dir) => {
-        // Plan shape (r20, guide §2.3/§2.4 — aggregate before you
-        // shuffle): ONE row-level join total, the broadcast of the tiny
-        // quantity-rank map. The r18→r19 plan attached BOTH rank maps to
-        // every fact row (the price map — one row per distinct price ≈
-        // the row count — via a shuffled-hash join) and aggregated the
-        // joined rows. But every power sum is computable from the
-        // per-(flag, yi) VALUE-COUNT table once it carries the xi-rank
-        // partials: Σrows rx = Σgroups srx, Σrows ry = Σgroups c·ry,
-        // Σrows rx·ry = Σgroups ry·srx — exact integer identities, so the
-        // six sums (and hence rho) are bit-identical to the row-level
-        // spelling while the price-side row join, its exchange of the
-        // whole fact table by (flag, yi), and the row-count-sized
-        // aggregate input all disappear. `d` itself is NOT persisted: it
-        // is two cheap narrow parquet scans now (the r19 withGlobalPos
-        // measurement: caching cheap scans costs more than the rescan);
-        // the expensive aggregate `g` is persisted inside
-        // groupedPrefixSum (split points / offsets / window — 3
-        // consumers, via the bounded OpCaches registry).
-        val d = tbl(s, dir, "lineitem").select(col("l_returnflag"),
-          round(col("l_quantity") * 100).cast("long").as("xi"),
-          round(col("l_extendedprice") * 100).cast("long").as("yi"))
-        // average ranks (doubled → exact integers) from grouped value
-        // counts: r2 = 2·|smaller| + ties + 1, via the distributed prefix
-        // sum — no per-group full-table window anywhere.
-        def ranksOf(counted: DataFrame, v: String, r: String): DataFrame =
-          Positional.groupedPrefixSum(counted, Seq("l_returnflag"),
-              Seq(col(v)), col("c"), "cum")
-            .withColumn(r,
-              lit(2L) * (col("cum") - col("c")) + col("c") + lit(1L))
-        // ~50 distinct quantity-cents values per flag — broadcast-safe at
-        // any scale (guide §3.1: the r18 plan auto-broadcast the full
-        // fact projection instead; pin the genuinely tiny side).
-        val rx = ranksOf(
-          d.groupBy(col("l_returnflag"), col("xi"))
-            .agg(count(lit(1)).as("c")), "xi", "rx")
-          .select(col("l_returnflag"), col("xi"), col("rx"))
-        // Value-count table over yi, carrying the xi-rank partials. Long
-        // partials inherit the existing rank-product bound (comment
-        // above: exact up to ~3·10⁹ rows per group; past that cast to
-        // DECIMAL before multiplying).
-        val g = d.join(broadcast(rx), Seq("l_returnflag", "xi"))
-          .groupBy(col("l_returnflag"), col("yi"))
-          .agg(count(lit(1)).as("c"), sum(col("rx")).as("srx"),
-            sum(col("rx") * col("rx")).as("srxx"))
-        ranksOf(g, "yi", "ry")
-          .groupBy(col("l_returnflag"))
-          .agg(sum(col("c")).cast("double").as("n"),
-            isum(col("srx")).as("sx"), isum(col("c") * col("ry")).as("sy"),
-            isum(col("srxx")).as("sxx"),
-            isum(col("c") * col("ry") * col("ry")).as("syy"),
-            isum(col("srx") * col("ry")).as("sxy"))
-          .select(col("l_returnflag"),
-            ((col("sxy") - col("sx") * col("sy") / col("n")) /
-              (sqrt(col("sxx") - col("sx") * col("sx") / col("n")) *
-                sqrt(col("syy") - col("sy") * col("sy") / col("n"))))
-              .as("rho"))
-          .orderBy(col("l_returnflag"))
-      },
+      (s, dir) =>
+        spearmanRho(tbl(s, dir, "lineitem").select(col("l_returnflag"),
+            round(col("l_quantity") * 100).cast("long").as("xi"),
+            round(col("l_extendedprice") * 100).cast("long").as("yi"),
+            lit(1L).as("w")))
+          .orderBy(col("l_returnflag")),
       Some("""WITH d AS (
              |  SELECT l_returnflag,
              |    CAST(round(l_quantity * 100) AS BIGINT) AS xi,

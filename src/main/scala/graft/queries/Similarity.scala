@@ -534,11 +534,6 @@ object Similarity {
     * query (16% vs 9% of that corpus). Recall-per-byte favors 16k
     * everywhere it has any effect. */
   private[graft] val MatPrefixDim = 40
-  /** The pre-r18 prefix width, kept ONLY so MatPrefixProbe's sweep always
-    * carries the below-the-knee baseline arm alongside the shipped point
-    * (same rule as [[MatShortlistMinPrior]]): a retune must not leave the
-    * probe unable to reproduce the committed decision artifact. */
-  private[graft] val MatPrefixDimPrior = 32
   private[graft] val MatShortlistMin = 16 * K
   /** The pre-r17 floor (8·K), kept ONLY so the sf1 probe's old-vs-new
     * floor sweep derives both arms from named constants instead of

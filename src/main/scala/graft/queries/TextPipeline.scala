@@ -29,13 +29,11 @@ object TextPipeline {
     * maximal document frequency ranks them LAST (cnt asc), so they never
     * enter a prefix — the regime the `frequencyOrdered` flag exists for
     * (Dedup.scala's 100 TB skew caveat), now pinned by both an oracle
-    * gate and probe arms. Public: JaccardOrderProbe builds its skew arms
-    * from the same constant. */
+    * gate and the skew arms recorded in JACCARD_ORDER_PROBE.json. */
   val JaccardSkewSuffix = " zz0 zz1 zz2"
 
   /** The documents table with [[JaccardSkewSuffix]] appended to every
-    * text — the skewed corpus the freq-ordered gate and probe arms run
-    * on. Public for JaccardOrderProbe. */
+    * text — the skewed corpus the freq-ordered gate runs on. */
   def skewedDocs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     docs(s, dir).withColumn("text",
@@ -463,8 +461,8 @@ object TextPipeline {
     // the boilerplate LAST and never in a prefix. The gate runs
     // frequencyOrdered = true end to end (df count, per-doc rank, prefix
     // join, exact verify) against the same order-independent all-pairs
-    // oracle; the candidate collapse itself is measured by
-    // JaccardOrderProbe's skew arms (JACCARD_ORDER_PROBE.json). The r18
+    // oracle; the candidate collapse itself was measured by the skew arms
+    // recorded in JACCARD_ORDER_PROBE.json. The r18
     // dispatch rule at Dedup.scala (candidates >> verified under hash
     // order = skew = flip the flag) stops being hypothetical here.
     "q_pipe_jaccard_freq" -> Q(

@@ -2,11 +2,12 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared plumbing for the probe mains (Sf1Probe, JaccardOrderProbe,
-  * MatPrefixProbe): ONE SparkSession recipe and ONE recall definition, so
-  * the artifacts the probes write stay comparable by construction — a
-  * conf or metric drift in a single probe would otherwise make its rows
-  * silently incomparable with the others'. */
+/** Shared plumbing for the probe mains (Sf1Probe; the JACCARD_ORDER_PROBE
+  * and MAT_PREFIX_PROBE artifacts were written with it too): ONE
+  * SparkSession recipe and ONE recall definition, so the artifacts the
+  * probes write stay comparable by construction — a conf or metric drift
+  * in a single probe would otherwise make its rows silently incomparable
+  * with the others'. */
 object ProbeUtil {
 
   /** The probes' session: local[SPARK_GRAFT_CPUS] with the same confs the

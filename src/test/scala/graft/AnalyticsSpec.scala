@@ -176,6 +176,39 @@ class AnalyticsSpec extends SparkTestBase {
     }
   }
 
+  test("spearmanRho stays exact past 2^63 rank products in a tie-heavy group") {
+    // each row stands for w identical rows: group A holds ~2·10⁹ rows in
+    // two tie groups of 10⁹, so doubled ranks reach ~4·10⁹ and rx·rx,
+    // c·ry·ry pass 2⁶³ — an ANSI overflow error if multiplied in LONG
+    val rows = Seq(
+      ("A", 10L, 5L, 1000000000L), ("A", 20L, 7L, 1000000000L),
+      ("A", 30L, 5L, 3L), ("A", 40L, 9L, 2L), ("A", 5L, 7L, 1L),
+      ("B", 1L, 2L, 1L), ("B", 2L, 1L, 1L), ("B", 3L, 3L, 2L))
+    val got = graft.queries.Analytics
+      .spearmanRho(rows.toDF("l_returnflag", "xi", "yi", "w")).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // exact reference: Pearson over the weighted doubled average ranks
+    // 2·|smaller| + ties + 1, in BigInt
+    def ranks(vw: Seq[(Long, Long)]): Map[Long, BigInt] = {
+      val c = vw.groupMapReduce(_._1)(x => BigInt(x._2))(_ + _)
+      c.keys.map(v => v -> (2 * c.filter(_._1 < v).values.sum + c(v) + 1)).toMap
+    }
+    for ((g, rs) <- rows.groupBy(_._1)) {
+      val rx = ranks(rs.map(r => (r._2, r._4)))
+      val ry = ranks(rs.map(r => (r._3, r._4)))
+      def sum(f: ((String, Long, Long, Long)) => BigInt) =
+        rs.map(r => BigInt(r._4) * f(r)).sum
+      val n = sum(_ => 1)
+      val (sx, sy) = (sum(r => rx(r._2)), sum(r => ry(r._3)))
+      val sxx = sum(r => rx(r._2) * rx(r._2))
+      val syy = sum(r => ry(r._3) * ry(r._3))
+      val sxy = sum(r => rx(r._2) * ry(r._3))
+      val want = (n * sxy - sx * sy).toDouble /
+        math.sqrt((n * sxx - sx * sx).toDouble * (n * syy - sy * sy).toDouble)
+      assert(math.abs(got(g) - want) < 1e-9, s"group $g: got ${got(g)}, want $want")
+    }
+  }
+
   test("q_grouped_ols matches a driver-side least-squares fit") {
     val got = SparkEntry.queries("q_grouped_ols")(spark, sf0001).collect()
       .map(r => (r.getString(0), r.getString(1)) ->

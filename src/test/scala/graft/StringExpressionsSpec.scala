@@ -79,6 +79,10 @@ class StringExpressionsSpec extends SparkTestBase {
     val decomposed = "é"       // e + combining acute
     assert(one(decomposed, normalizeText($"s", "NFC")) === composed)
     assert(one(composed, normalizeText($"s", "NFD")) === decomposed)
+    // ASCII is invariant under every form
+    val ascii = "Ab1 ~\t\u007f"
+    Seq("NFC", "NFD", "NFKC", "NFKD").foreach(f =>
+      assert(one(ascii, normalizeText($"s", f)) === ascii))
   }
 
   test("zfill keeps sign in place") {

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
-import graft.expressions.StringKernels
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import graft.expressions.{CodepointPaths, StringKernels, VectorKernels}
 
 /** Property tests: string kernels vs brute-force references / invariants
   * over random ASCII and multi-byte strings. Catches the off-by-one and
@@ -173,6 +174,113 @@ object StringKernelProps extends Properties("StringKernels") {
       val brute = cps(s).foldLeft(0L)((a, c) => (a * 31 + c) % 1000000007L)
       h == brute && h >= 0 && h < 1000000007L
     }
+
+  // ---- ASCII byte paths vs codepoint paths ----
+  //
+  // Each kernel with an ASCII fast path must equal its codepoint path on
+  // the same input. ASCII strings draw from all 128 code units (control
+  // characters such as \x0b and \x1c-\x1f are whitespace to Java, DEL
+  // is not) or from alphabets that make each predicate true often; mixed
+  // strings put one non-ASCII codepoint at the start, middle or end, so
+  // the dispatch is exercised both ways.
+
+  private val asciiAlphabets: Seq[Seq[Char]] = Seq(
+    (0 until 128).map(_.toChar),
+    ('a' to 'z') ++ ('A' to 'Z'),
+    ('0' to '9'),
+    " \t\n\u000b\f\r\u001c\u001d\u001e\u001f".toSeq,
+    ('a' to 'z') ++ " 1.-".toSeq,
+    ('A' to 'Z') ++ " 1.-".toSeq)
+  private val asciiAny: Gen[String] = Gen.oneOf(
+    for {
+      alphabet <- Gen.oneOf(asciiAlphabets)
+      cs <- Gen.listOf(Gen.oneOf(alphabet))
+    } yield cs.mkString,
+    // title-cased words: "Ab Cd1"
+    Gen.listOf(Gen.alphaLowerStr.map(_.capitalize)).map(_.mkString(" ")))
+  // 2-, 3- and 4-byte codepoints that each meet some predicate: title-case
+  // ǅ, superscript ² (digit, not decimal), Arabic-Indic ٣ (decimal), Roman
+  // Ⅻ (numeric), no-break space, final-sigma Σ, ß and ﬁ (swap expands)
+  private val nonAscii: Seq[String] =
+    Seq("é", "ß", "Σ", "ǅ", "²", "٣", "Ⅻ", "\u00a0", "\u2028", "ﬁ", "中", "𝄞")
+  private val mixed: Gen[String] = for {
+    s <- asciiAny
+    c <- Gen.oneOf(nonAscii)
+    at <- Gen.oneOf(0, s.length / 2, s.length)
+  } yield s.patch(at, c, 0)
+  private val text: Gen[String] = Gen.frequency(3 -> asciiAny, 2 -> mixed)
+
+  // the dispatch test reads 8 bytes at a time: vary the start alignment
+  // and let the non-ASCII byte fall in a word or in the tail
+  property("isAscii == UTF8String.isFullAscii at every alignment") =
+    forAll(text, Gen.choose(0, 7)) { (s, pad) =>
+      val b = ("x" * pad + s).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val v = UTF8String.fromBytes(b, pad, b.length - pad)
+      CodepointPaths.isAscii(v) == v.isFullAscii
+    }
+
+  for ((name, kernel, cp) <- CodepointPaths.predicates)
+    property(s"$name ASCII path == codepoint path") =
+      forAll(text)(s => kernel(u(s)) == cp(u(s)))
+
+  for ((name, kernel, cp) <- CodepointPaths.strings)
+    property(s"$name ASCII path == codepoint path") =
+      forAll(text)(s => kernel(u(s)) == cp(u(s)))
+
+  property("polyHash ASCII path == codepoint path") = {
+    val (_, kernel, cp) = CodepointPaths.polyHash
+    forAll(text)(s => kernel(u(s)) == cp(u(s)))
+  }
+
+  private val sliceBound: Gen[Int] =
+    Gen.frequency(1 -> Gen.const(Int.MinValue), 4 -> Gen.choose(-20, 20))
+
+  property("sliceCodepoints ASCII path == codepoint path") =
+    forAll(text, sliceBound, sliceBound,
+        Gen.oneOf(-5, -3, -2, -1, 1, 2, 3, 5)) { (s, a, b, step) =>
+      StringKernels.sliceCodepoints(u(s), a, b, step) ==
+        CodepointPaths.sliceCp(u(s), a, b, step)
+    }
+
+  // the needle is a piece of the subject (found) or an independent short
+  // string (usually absent, sometimes non-ASCII against an ASCII subject)
+  property("rfindLiteral ASCII path == codepoint path") =
+    forAll(text, Gen.choose(0, 30), Gen.choose(0, 3), Gen.resize(3, text),
+        Gen.oneOf(true, false)) { (s, off, len, other, fromSubject) =>
+      val sub = if (fromSubject) s.slice(off, off + len) else other
+      StringKernels.rfindLiteral(u(s), u(sub)) ==
+        CodepointPaths.rfindCp(u(s), u(sub))
+    }
+
+  property("normalize == java.text.Normalizer for every form") =
+    forAll(text, Gen.oneOf(java.text.Normalizer.Form.values.toSeq)) { (s, f) =>
+      StringKernels.normalize(u(s), f).toString ==
+        java.text.Normalizer.normalize(s, f)
+    }
+
+  // the per-bit ±1 vote fold simHash30 replaced: bit b is set iff the sum
+  // over elements is > 0, a null element votes -1, a null array is 0
+  private def simHashFold(h: ArrayData): Long =
+    if (h == null) 0L
+    else (0 until 30).foldLeft(0L) { (out, b) =>
+      val votes = (0 until h.numElements()).foldLeft(0L) { (acc, i) =>
+        if (!h.isNullAt(i) && ((h.getLong(i) >> b) & 1L) == 1L) acc + 1
+        else acc - 1
+      }
+      if (votes > 0) out + (1L << b) else out
+    }
+
+  // few distinct values make tied votes (sum exactly 0) common
+  private val hashArray: Gen[ArrayData] = Gen.frequency(
+    1 -> Gen.const(null),
+    8 -> Gen.listOf(Gen.frequency(
+      1 -> Gen.const(null),
+      3 -> Gen.oneOf(0L, 1L, 2L, 3L, 0x3FFFFFFFL, 0x2AAAAAAAL, -1L),
+      3 -> Gen.choose(Long.MinValue, Long.MaxValue).map(Long.box)))
+      .map(xs => new GenericArrayData(xs.toArray[Any])))
+
+  property("VectorKernels.simHash30 == per-bit vote fold") =
+    forAll(hashArray)(h => VectorKernels.simHash30(h) == simHashFold(h))
 
   // ---- strip corpora (reference tests/test_text.py:145-176 drives strip
   // through curated multi-byte examples; this is the generated analog) ----

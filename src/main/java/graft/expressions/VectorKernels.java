@@ -144,22 +144,36 @@ public final class VectorKernels {
    * duplicates and a shared null element are mirrored anyway), while the
    * denominator uses the RAW sizes. Both conversions to double are exact
    * for any realistic set size, so the division is the identical IEEE op
-   * the oracle's list_intersect SQL performs. */
+   * the oracle's list_intersect SQL performs. The distinct common
+   * elements are counted in an open-addressing table of b's values with
+   * primitive keys, so no element is boxed (a merge of two sorted copies
+   * measured slower than the boxed HashSet on 20-60-element arrays: the
+   * sorts dominate). */
   public static double jaccardLong(ArrayData a, ArrayData b) {
     int sa = a.numElements(), sb = b.numElements();
     if (sa + sb == 0) return 1.0;
-    java.util.HashSet<Long> bs = new java.util.HashSet<>(Math.max(16, sb * 2));
+    // load factor < 1/2: a power of two in (2·sb, 4·sb]
+    int cap = Integer.highestOneBit(Math.max(sb, 4)) << 2, mask = cap - 1;
+    int shift = 64 - Integer.numberOfTrailingZeros(cap);
+    long[] keys = new long[cap];
+    byte[] state = new byte[cap]; // 0 empty, 1 in b, 2 in b and counted
     boolean bNull = false;
     for (int i = 0; i < sb; i++) {
-      if (b.isNullAt(i)) bNull = true; else bs.add(b.getLong(i));
+      if (b.isNullAt(i)) { bNull = true; continue; }
+      long x = b.getLong(i);
+      int h = (int) ((x * 0x9E3779B97F4A7C15L) >>> shift);
+      while (state[h] != 0 && keys[h] != x) h = (h + 1) & mask;
+      keys[h] = x;
+      state[h] = 1;
     }
-    java.util.HashSet<Long> seen = new java.util.HashSet<>(Math.max(16, sa * 2));
     boolean aNull = false;
     long inter = 0;
     for (int i = 0; i < sa; i++) {
       if (a.isNullAt(i)) { aNull = true; continue; }
       long x = a.getLong(i);
-      if (bs.contains(x) && seen.add(x)) inter++;
+      int h = (int) ((x * 0x9E3779B97F4A7C15L) >>> shift);
+      while (state[h] != 0 && keys[h] != x) h = (h + 1) & mask;
+      if (state[h] == 1) { inter++; state[h] = 2; }
     }
     if (aNull && bNull) inter++;
     return (double) inter / (double) (sa + sb - inter);

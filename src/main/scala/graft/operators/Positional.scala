@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.expressions.{SplitBucket, toCol, toExpr}
 
 /** Scale-safe positional operators (take-by-position, factorize).
   *
@@ -16,14 +19,16 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the rows branch and the counts branch, so the two branches can disagree
   * by a row at partition edges (observed in practice).
   *
-  * [[withGlobalPos]] therefore pins the boundaries itself: a deterministic
-  * hash-filtered sample of the key column is collected ONCE on the driver
-  * and folded into a PURE bucket expression (literal split points). Every
-  * pass — per-bucket counts, and the per-bucket `row_number` — evaluates
-  * that same pure expression, so no two branches can ever disagree, and the
-  * whole plan stays inside whole-stage codegen (no RDD drop-out, no row
-  * boxing). Only the final pass moves whole rows; the count/sample/offset
-  * passes scan just the key column (parquet-pruned).
+  * [[withGlobalPos]] therefore pins the boundaries itself: split points of
+  * the key column are computed ONCE, as the plan is built, and become the
+  * literal splits of a PURE bucket expression,
+  * [[graft.expressions.SplitBucket]] (a codegen'd binary search under
+  * Catalyst's ordering for the key type).
+  * Every pass — per-bucket counts, and the per-bucket `row_number` —
+  * evaluates that same pure expression, so no two branches can ever
+  * disagree, and the whole plan stays inside whole-stage codegen (no RDD
+  * drop-out, no row boxing). Only the final pass moves whole rows; the
+  * split and count passes scan just the key column (parquet-pruned).
   *
   * Reference semantics: fletcher take/gather (base.py:1215-1270) and
   * factorize (base.py:961-983).
@@ -38,87 +43,124 @@ object Positional {
     * points, and the per-bucket window tie-breaks on the remaining columns.
     * This is sound because bucket boundaries respect leading-column order
     * and equal leading values always land in one bucket, so concatenating
-    * buckets yields exactly the composite sort order. */
-  def withGlobalPos(df: DataFrame, sortCols: Seq[Column],
-      posCol: String): DataFrame = sampledSplitPos(df, sortCols, posCol)
-
-  /** Codegen global-position plan.
+    * buckets yields exactly the composite sort order.
     *
     * 1. [[splitPoints]] → ≤ numShufflePartitions−1 literal split points on
     *    the driver (one key-pruned aggregate job for numeric keys), from
     *    the LEADING sort column;
-    * 2. bucket = Σ [key > splitᵢ] — a pure, order-preserving expression;
-    * 3. per-bucket base offsets as a broadcast subquery (aggregate to ≤ n
-    *    rows + cumulative sum) — runs inside the final job;
+    * 2. bucket = [[graft.expressions.SplitBucket]] over those splits — a
+    *    pure, order-preserving expression;
+    * 3. per-bucket base offsets as a broadcast subquery ([[offsets]]);
     * 4. pos = offset(bucket) + row_number() over (bucket, sortCols...) —
     *    the window shuffles each bucket to one reducer, never the whole
     *    table to one. A leading column whose hot value dominates serializes
     *    that bucket through one reducer — put the highest-cardinality
-    *    column first when the order is a free choice.
-    */
-  private def sampledSplitPos(df: DataFrame, sortCols: Seq[Column],
+    *    column first when the order is a free choice. */
+  def withGlobalPos(df: DataFrame, sortCols: Seq[Column],
       posCol: String): DataFrame = {
     require(sortCols.nonEmpty, "withGlobalPos needs at least one sort column")
-    // NOT persisted, deliberately (r19 measurement): the operator consumes
-    // its input three times (split points, offsets subquery, main pass),
-    // but its callers hand in cheap narrow scans/projections — caching
-    // those cost MORE cpu (columnar cache build + decompress per read)
-    // than the two extra rescans it saved. groupedPrefixSums, whose
-    // callers hand in aggregates, is the persisting variant.
-    val key = sortCols.head
-    val spark = df.sparkSession
-    val n = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val splits = splitPoints(df, key, n)
-    val bucketOf = bucketExpr(df, key, splits)
-    // Per-bucket base offsets stay IN the plan as a broadcast subquery (a
-    // key-column-pruned aggregate down to ≤ n rows, then a cumulative sum
-    // over those n rows) — no extra driver action, and the counts subtree
-    // executes inside the same job as the final pass.
-    //
-    // The cumsum window runs over ≤ n+1 rows, so one window group is fine —
-    // but an EMPTY partitionSpec makes WindowExec log the scary "No
-    // Partition Defined for Window" WARN that pattern-matches a real
-    // scale-killer. Partition by pmod(__gp_b, 1): constant 0 on every row
-    // (same single bounded group), yet non-foldable, so the optimizer's
-    // EliminateWindowPartitions can't strip it back to the warning case.
-    // Genuine full-cardinality global windows stay forbidden by
-    // PlanGuardSpec; this just stops the benign bounded one from paging.
+    val n = numPartitions(df)
+    val bucket = bucketOf(df, sortCols.head, n)
+    numbered(df, bucket, offsets(df, bucket), sortCols, posCol, n)
+  }
+
+  /** Positional take (gather): rows at the given 0-based positions under the
+    * `sortCols` total order, with their positions (one row per distinct
+    * position; negative and out-of-range positions match no row).
+    *
+    * Same plan as [[withGlobalPos]], but with m = clamp(16·k,
+    * numShufflePartitions, 4096) finer buckets for k distinct wanted
+    * positions, and the offsets table filtered to the buckets whose
+    * [base, base + count) holds a wanted position. The inner broadcast
+    * join with that table drops every other bucket's rows before the
+    * window's exchange, so only ≤ k buckets of ≈ |df|/m rows are shuffled
+    * and sorted. Positions stay exact: every base offset is an exact count,
+    * so bucket boundaries affect only balance. */
+  def takePositions(df: DataFrame, sortCols: Seq[Column],
+      positions: Seq[Long], posCol: String = "pos"): DataFrame = {
+    require(sortCols.nonEmpty, "takePositions needs at least one sort column")
+    val wanted = positions.filter(_ >= 0).distinct.sorted.toIndexedSeq
+    val n = numPartitions(df)
+    val m = math.max(n, math.min(16L * wanted.size, MaxTakeBuckets).toInt)
+    val bucket = bucketOf(df, sortCols.head, m)
+    // #{wanted < x}: a bucket holds a wanted position iff the count differs
+    // at its two ends
+    def below(x: Column) = toCol(SplitBucket(toExpr(x), wanted))
+    val hit = offsets(df, bucket).filter(
+      below(col("__gp_base") + col("__gp_c")) > below(col("__gp_base")))
+    numbered(df, bucket, hit, sortCols, posCol, n)
+      .filter(col(posCol).isin(wanted: _*))
+  }
+
+  /** Upper bound on [[takePositions]]' bucket count: it bounds the offsets
+    * table (broadcast) and the number of split points. */
+  private val MaxTakeBuckets = 4096L
+
+  private def numPartitions(df: DataFrame): Int =
+    math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
+
+  /** Per-bucket exact row count `__gp_c` and base offset `__gp_base` (the
+    * rows of all lower buckets). Stays IN the plan as a broadcast subquery
+    * (a key-column-pruned aggregate down to one row per bucket, then a
+    * cumulative sum over those rows) — no extra Spark action.
+    *
+    * The cumsum window runs over one row per bucket, so one window group
+    * is fine — but an EMPTY partitionSpec makes WindowExec log the scary
+    * "No Partition Defined for Window" WARN that pattern-matches a real
+    * scale-killer. Partition by pmod(__gp_b, 1): constant 0 on every row
+    * (same single bounded group), yet non-foldable, so the optimizer's
+    * EliminateWindowPartitions can't strip it back to the warning case.
+    * Genuine full-cardinality global windows stay forbidden by
+    * PlanGuardSpec; this just stops the benign bounded one from paging. */
+  private def offsets(df: DataFrame, bucket: Column): DataFrame = {
     val cumw = Window.partitionBy(pmod(col("__gp_b"), lit(1)))
       .orderBy(col("__gp_b"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = df.groupBy(bucketOf.as("__gp_b"))
+    df.groupBy(bucket.as("__gp_b"))
       .agg(count(lit(1)).as("__gp_c"))
-      .select(col("__gp_b"),
+      .select(col("__gp_b"), col("__gp_c"),
         coalesce(sum(col("__gp_c")).over(cumw), lit(0L)).as("__gp_base"))
+  }
+
+  /** pos = base(bucket) + row_number() within the bucket, over the rows of
+    * the buckets listed in `offs` (an inner broadcast join). The rows are
+    * placed by bucket id (`repartitionById`: bucket b goes to reducer
+    * b mod n), and the window reuses that exchange as its clustering on
+    * `__gp_b`. Hash placement collided: at n = 4, buckets 0–3 went to
+    * reducers [3, 3, 2, 3].
+    *
+    * NOT persisted, deliberately: the input is consumed three times (split
+    * points, offsets, this pass), but the first two read only the key
+    * column (parquet- and cache-pruned), and this pass reads the full width
+    * once and shuffles only the listed buckets. A persist would build a
+    * full-width columnar cache to save two key-only rescans — the r19
+    * measurement on the callers' cheap narrow scans found it cost MORE cpu
+    * than it saved, and [[takePositions]]' narrower final pass leaves even
+    * less to save. [[groupedPrefixSums]], whose callers hand in aggregates,
+    * is the persisting variant. */
+  private def numbered(df: DataFrame, bucket: Column, offs: DataFrame,
+      sortCols: Seq[Column], posCol: String, n: Int): DataFrame = {
     val rn = row_number().over(
       Window.partitionBy(col("__gp_b"))
         .orderBy(sortCols.map(_.asc_nulls_first): _*))
-    df.withColumn("__gp_b", bucketOf)
-      .join(broadcast(offsets), "__gp_b")
+    df.withColumn("__gp_b", bucket)
+      .join(broadcast(offs), "__gp_b")
+      .repartitionById(n, col("__gp_b"))
       .withColumn(posCol, col("__gp_base") + rn.cast("long") - 1L)
-      .drop("__gp_b", "__gp_base")
+      .drop("__gp_b", "__gp_c", "__gp_base")
   }
 
-  /** Pure order-preserving bucket expression over driver-pinned `splits`:
-    * bucket = Σ [key > splitᵢ]. NULL keys: null > s is null → otherwise(0)
-    * → bucket 0, matching asc_nulls_first window order. NaN keys: every
-    * comparison is false, which would strand them in bucket 0 while Spark
-    * SORTS NaN greatest — route them to the top bucket explicitly so bucket
-    * order and sort order agree. */
-  private def bucketExpr(df: DataFrame, key: Column,
-      splits: Seq[Any]): Column = {
-    val isFloating = df.select(key).schema.head.dataType match {
-      case org.apache.spark.sql.types.DoubleType |
-           org.apache.spark.sql.types.FloatType => true
-      case _ => false
-    }
-    if (splits.isEmpty) lit(0)
-    else {
-      val fold =
-        splits.map(s => when(key > lit(s), 1).otherwise(0)).reduce(_ + _)
-      if (isFloating) when(isnan(key), lit(splits.size)).otherwise(fold)
-      else fold
-    }
+  /** Pure order-preserving bucket expression over split points fixed as
+    * the plan is built, for `buckets` buckets of `key` ([[splitPoints]]), as
+    * Catalyst values sorted under the key type's ordering. A NULL key falls
+    * in bucket 0 and NaN above every number, where ASC NULLS FIRST sorts
+    * them (the ordering contract of [[graft.expressions.SplitBucket]]). */
+  private def bucketOf(df: DataFrame, key: Column, buckets: Int): Column = {
+    val dt = df.select(key).schema.head.dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val splits = splitPoints(df, key, buckets).map(toCatalyst)
+      .sorted(TypeUtils.getInterpretedOrdering(dt)).toIndexedSeq
+    toCol(SplitBucket(toExpr(key), splits))
   }
 
   /** Distributed grouped prefix (running) sum — the two-phase scan: the
@@ -165,13 +207,11 @@ object Positional {
     // vs 1.87 s without it — so the 3-consumer reuse beats the columnar
     // cache build even when every sample pays the build.
     val df = OpCaches.cached(df0)
-    val spark = df.sparkSession
-    val n = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val splits = splitPoints(df, ordCols.head, n)
+    val bucket = bucketOf(df, ordCols.head, numPartitions(df))
     val grpC = grpCols.map(col)
     val vcols = vals.indices.map(i => s"__ps_v$i")
     val withB = vals.zip(vcols).foldLeft(
-        df.withColumn("__ps_b", bucketExpr(df, ordCols.head, splits))) {
+        df.withColumn("__ps_b", bucket)) {
       case (d, ((v, _), vc)) => d.withColumn(vc, v)
     }
     val runw = Window.partitionBy(grpC :+ col("__ps_b"): _*)
@@ -225,9 +265,10 @@ object Positional {
       case _ =>
         val cnt = df.count()
         if (cnt == 0) return Nil
-        // ~64 sample keys per target bucket: plenty for split selection,
-        // tiny on the driver; the hash-mod filter is a pure predicate.
-        val sampleTarget = math.max(n.toLong * 64, 2048L)
+        // ~64 sample keys per target bucket (≥ 16 at takePositions' 4096
+        // buckets): plenty for split selection, bounded in memory; the
+        // hash-mod filter is a pure predicate.
+        val sampleTarget = math.min(math.max(n.toLong * 64, 2048L), 1L << 16)
         val M = 1000000L
         val thresh = math.min(M, (M * sampleTarget) / cnt + 1)
         val sample = df
@@ -239,14 +280,6 @@ object Positional {
         else (1 until n).map(i => sample((i.toLong * m / n).toInt)).distinct
     }
   }
-
-  /** Positional take (gather): rows at the given 0-based positions under the
-    * `sortCols` total order, with their positions. Only the matching rows
-    * survive; everything stays parallel. */
-  def takePositions(df: DataFrame, sortCols: Seq[Column],
-      positions: Seq[Long], posCol: String = "pos"): DataFrame =
-    withGlobalPos(df, sortCols, posCol)
-      .filter(col(posCol).isin(positions: _*))
 
   /** Dictionary-encode `valueCol`: stable dense codes 0..n-1 assigned in
     * value sort order. Null values keep their rows and get code -1, matching

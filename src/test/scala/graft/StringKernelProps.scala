@@ -282,6 +282,52 @@ object StringKernelProps extends Properties("StringKernels") {
   property("VectorKernels.simHash30 == per-bit vote fold") =
     forAll(hashArray)(h => VectorKernels.simHash30(h) == simHashFold(h))
 
+  // the HashSet fold jaccardLong replaced: distinct common non-null values,
+  // plus one when both arrays hold a null, over the RAW sizes
+  private def jaccardFold(a: ArrayData, b: ArrayData): Double = {
+    val (sa, sb) = (a.numElements(), b.numElements())
+    if (sa + sb == 0) 1.0
+    else {
+      val bs = new java.util.HashSet[java.lang.Long]()
+      var bNull = false
+      for (i <- 0 until sb)
+        if (b.isNullAt(i)) bNull = true else bs.add(b.getLong(i))
+      val seen = new java.util.HashSet[java.lang.Long]()
+      var aNull = false
+      var inter = 0L
+      for (i <- 0 until sa)
+        if (a.isNullAt(i)) aNull = true
+        else if (bs.contains(a.getLong(i)) && seen.add(a.getLong(i))) inter += 1
+      if (aNull && bNull) inter += 1
+      inter.toDouble / (sa + sb - inter).toDouble
+    }
+  }
+
+  private val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    .create(Array[org.apache.spark.sql.types.DataType](
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))
+
+  // few distinct values make duplicates and common values likely; half the
+  // arrays are unsafe (the layout a scan hands the kernel)
+  private val longSet: Gen[ArrayData] = for {
+    xs <- Gen.listOf(Gen.frequency(
+      1 -> Gen.const(null),
+      6 -> Gen.choose(-4L, 4L).map(Long.box),
+      1 -> Gen.oneOf(Long.MinValue, Long.MaxValue).map(Long.box),
+      2 -> Gen.choose(Long.MinValue, Long.MaxValue).map(Long.box)))
+    unsafe <- Gen.oneOf(false, true)
+  } yield {
+    val g = new GenericArrayData(xs.toArray[Any])
+    if (unsafe) toUnsafe(org.apache.spark.sql.catalyst.InternalRow(g))
+      .getArray(0).copy()
+    else g
+  }
+
+  property("VectorKernels.jaccardLong == HashSet fold (duplicates, nulls)") =
+    forAll(longSet, longSet) { (a, b) =>
+      VectorKernels.jaccardLong(a, b) == jaccardFold(a, b)
+    }
+
   // ---- strip corpora (reference tests/test_text.py:145-176 drives strip
   // through curated multi-byte examples; this is the generated analog) ----
   //

@@ -1,6 +1,8 @@
 package graft.expressions;
 
+import org.apache.spark.sql.catalyst.util.ArrayData;
 import org.apache.spark.unsafe.Platform;
+import org.apache.spark.unsafe.array.ByteArrayMethods;
 import org.apache.spark.unsafe.types.UTF8String;
 
 /**
@@ -14,10 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String;
  * generated code, which is the Spark-native shape of the same loop.
  *
  * BYTE CONTRACT: like the reference's loops over raw Arrow UTF-8 buffers,
- * the per-row kernels read the UTF-8 bytes. countLiteral and replaceN are
- * byte-level for every input; swapCase, caseFold, sliceCodepoints,
- * rfindLiteral, polyHash, normalize and the nine is* predicates take a
- * byte path when every byte is ASCII ({@link #isAscii}), so an ASCII row
+ * the per-row kernels read the UTF-8 bytes. countLiteral, replaceN,
+ * markerHits and pretokenCount are byte-level for every input; swapCase,
+ * caseFold, sliceCodepoints, rfindLiteral, polyHash, normalize and the nine
+ * is* predicates take a byte path when every byte is ASCII
+ * ({@link #isAscii}), so an ASCII row
  * never becomes a java.lang.String (one byte is one codepoint, and the
  * character classes come from {@link #ASCII_CLASS}). A row with any
  * non-ASCII byte takes the codepoint path (the package-private *Cp
@@ -627,6 +630,115 @@ public final class StringKernels {
             i += Character.charCount(cp);
         }
         return h;
+    }
+
+    // ---- token and pre-token counting for the text-quality gates: one
+    // pass per row, counting in place of materializing filtered token
+    // arrays or regex match arrays ----
+
+    /**
+     * Byte-keyed table from a token to the bitmask of the marker sets that
+     * hold it (bit i = set i, so at most 32 sets). Open addressing over the
+     * tokens' UTF-8 bytes, compared byte for byte as {@code isin} compares
+     * strings: case-sensitive, and a token in several sets ("la" is a
+     * Spanish and a French marker) carries several bits. A token longer than
+     * the longest marker is rejected on its length alone, which is most
+     * tokens of running text.
+     */
+    public static final class MarkerTable implements java.io.Serializable {
+        private final byte[][] keys;
+        private final int[] masks;
+        private final int maxLen;
+
+        public MarkerTable(String[][] sets) {
+            if (sets.length > 32) throw new IllegalArgumentException("at most 32 marker sets");
+            int n = 0, longest = -1;
+            for (String[] set : sets) n += set.length;
+            int cap = Integer.highestOneBit(Math.max(4, 4 * n - 1)) << 1;
+            keys = new byte[cap][];
+            masks = new int[cap];
+            for (int i = 0; i < sets.length; i++) {
+                for (String m : sets[i]) {
+                    byte[] k = m.getBytes(java.nio.charset.StandardCharsets.UTF_8);
+                    int slot = slot(k, Platform.BYTE_ARRAY_OFFSET, k.length);
+                    keys[slot] = k;
+                    masks[slot] |= 1 << i;
+                    longest = Math.max(longest, k.length);
+                }
+            }
+            maxLen = longest;
+        }
+
+        /** Slot holding these bytes, or the empty slot where they belong. */
+        private int slot(Object base, long at, int len) {
+            int h = len;
+            for (int i = 0; i < len; i++) h = h * 31 + Platform.getByte(base, at + i);
+            int mask = keys.length - 1;
+            for (int s = (h * 0x9E3779B9) >>> 16 & mask; ; s = (s + 1) & mask) {
+                byte[] k = keys[s];
+                if (k == null || (k.length == len && ByteArrayMethods.arrayEquals(
+                        k, Platform.BYTE_ARRAY_OFFSET, base, at, len))) return s;
+            }
+        }
+
+        /** Bitmask of the sets holding this token; 0 for none. */
+        int lookup(UTF8String tok) {
+            int len = tok.numBytes();
+            return len > maxLen ? 0 : masks[slot(tok.getBaseObject(), tok.getBaseOffset(), len)];
+        }
+    }
+
+    /**
+     * Marker hits of one token array, every set of the table in one pass:
+     * counts[i] = the number of elements in set i, with multiplicity. Null
+     * elements are never counted. counts.length is the table's set count.
+     */
+    public static void markerHits(ArrayData toks, MarkerTable table, int[] counts) {
+        java.util.Arrays.fill(counts, 0);
+        for (int i = 0, n = toks.numElements(); i < n; i++) {
+            if (toks.isNullAt(i)) continue;
+            for (int m = table.lookup(toks.getUTF8String(i)); m != 0; m &= m - 1) {
+                counts[Integer.numberOfTrailingZeros(m)]++;
+            }
+        }
+    }
+
+    /** Index of the first largest count: earlier sets win ties. */
+    public static int firstMax(int[] counts) {
+        int best = 0;
+        for (int i = 1; i < counts.length; i++) if (counts[i] > counts[best]) best = i;
+        return best;
+    }
+
+    /** Pre-token class of each byte: 0 the space byte, 1 an ASCII letter,
+     *  2 an ASCII digit, 3 anything else (every byte >= 0x80 included). */
+    private static final byte[] PRETOKEN_CLASS = new byte[256];
+    static {
+        for (int b = 0; b < 256; b++) {
+            PRETOKEN_CLASS[b] = (byte) (b == ' ' ? 0
+                : (b >= 'A' && b <= 'Z') || (b >= 'a' && b <= 'z') ? 1
+                : b >= '0' && b <= '9' ? 2 : 3);
+        }
+    }
+
+    /**
+     * The number of matches of {@code [A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]+}: the
+     * maximal runs of ASCII letters, of ASCII digits, or of other non-space
+     * bytes, read off the UTF-8 bytes in one pass. A non-ASCII codepoint
+     * (and any invalid byte, which decodes to U+FFFD) falls in the third
+     * class byte for byte, so the runs are those the regex finds over the
+     * decoded string.
+     */
+    public static int pretokenCount(UTF8String str) {
+        Object base = str.getBaseObject();
+        long at = str.getBaseOffset(), end = at + str.numBytes();
+        int n = 0, prev = 0;
+        for (; at < end; at++) {
+            int c = PRETOKEN_CLASS[Platform.getByte(base, at) & 0xFF];
+            if (c != prev && c != 0) n++;
+            prev = c;
+        }
+        return n;
     }
 
     /**

@@ -1,8 +1,12 @@
 package graft.expressions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -237,6 +241,120 @@ case class PolyHash(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
+/** One [[StringKernels.markerHits]] pass over a string array per row, the
+  * shared body of [[MarkerHits]] and [[LangPredict]]. The marker table is a
+  * reference object and the counts buffer per-task mutable state, so the
+  * generated source depends only on the number of sets. A null array gives
+  * [[ofNullArray]] (SQL NULL when that is null).
+  */
+sealed trait MarkerCounting extends UnaryExpression with ExpectsInputTypes {
+  protected def markerSets: Seq[Seq[String]]
+  protected def ofNullArray: Any
+  /** The value for one row's counts, and its Java source over `counts`. */
+  protected def fromCounts(counts: Array[Int]): Any
+  protected def fromCountsJava(ctx: CodegenContext, counts: String): String
+
+  @transient protected lazy val table =
+    new StringKernels.MarkerTable(markerSets.map(_.toArray).toArray)
+
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
+  override def nullable: Boolean = child.nullable && ofNullArray == null
+
+  override def eval(input: InternalRow): Any = child.eval(input) match {
+    case null => ofNullArray
+    case toks: ArrayData =>
+      val counts = new Array[Int](markerSets.size)
+      StringKernels.markerHits(toks, table, counts)
+      fromCounts(counts)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val ref = ctx.addReferenceObj("markers", table,
+      classOf[StringKernels.MarkerTable].getCanonicalName)
+    val counts = ctx.addMutableState("int[]", "markerCounts",
+      v => s"$v = new int[${markerSets.size}];")
+    val whenNull = Literal(ofNullArray, dataType).genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.isNull} = false;
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        ${CodeGenerator.defaultValue(dataType)};
+      if (${c.isNull}) {
+        ${whenNull.code}
+        ${ev.isNull} = ${whenNull.isNull};
+        ${ev.value} = ${whenNull.value};
+      } else {
+        graft.expressions.StringKernels.markerHits(${c.value}, $ref, $counts);
+        ${ev.value} = ${fromCountsJava(ctx, counts)};
+      }""")
+  }
+}
+
+/** Marker hits: the number of non-null elements of a string array that are
+  * in `set`, with multiplicity, compared byte for byte — the count
+  * `size(filter(toks, t -> t IN set))` gives. A null array gives what
+  * `size(null)` gives: -1 under `legacySizeOfNull`, else NULL. */
+case class MarkerHits(child: Expression, set: Seq[String],
+    legacySizeOfNull: Boolean) extends MarkerCounting {
+  override def dataType: DataType = IntegerType
+  override protected def markerSets: Seq[Seq[String]] = Seq(set)
+  override protected def ofNullArray: Any = if (legacySizeOfNull) -1 else null
+  override protected def fromCounts(counts: Array[Int]): Any = counts(0)
+  override protected def fromCountsJava(ctx: CodegenContext, counts: String) =
+    s"$counts[0]"
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/** Arg-max label of `langs` by marker hits over a string array, counted for
+  * every set in one pass: the first-listed label wins ties, so a row with no
+  * hit gets the first label. A null array gets what the per-set
+  * `size(filter)` scores give it: all -1 under `legacySizeOfNull` (the first
+  * label), else all NULL ("und"). Never NULL. */
+case class LangPredict(child: Expression, langs: Seq[(String, Seq[String])],
+    legacySizeOfNull: Boolean) extends MarkerCounting {
+  require(langs.nonEmpty, "need at least one language")
+  @transient private lazy val labels =
+    langs.map(l => UTF8String.fromString(l._1)).toArray
+  override def dataType: DataType = StringType
+  override protected def markerSets: Seq[Seq[String]] = langs.map(_._2)
+  override protected def ofNullArray: Any =
+    if (legacySizeOfNull) labels(0) else UTF8String.fromString("und")
+  override protected def fromCounts(counts: Array[Int]): Any =
+    labels(StringKernels.firstMax(counts))
+  override protected def fromCountsJava(ctx: CodegenContext, counts: String) = {
+    val ref = ctx.addReferenceObj("langLabels", labels,
+      "org.apache.spark.unsafe.types.UTF8String[]")
+    s"$ref[graft.expressions.StringKernels.firstMax($counts)]"
+  }
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+/** Pre-token count: the number of matches of
+  * `[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]+`, the value of
+  * `size(regexp_extract_all(str, that, 0))`, counted in one pass over the
+  * UTF-8 bytes ([[StringKernels.pretokenCount]]). A null string gives what
+  * `size(null)` gives: -1 under `legacySizeOfNull`, else NULL. */
+case class PretokenCount(child: Expression, legacySizeOfNull: Boolean)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = child.nullable && !legacySizeOfNull
+  override def eval(input: InternalRow): Any = child.eval(input) match {
+    case null => if (legacySizeOfNull) -1 else null
+    case s: UTF8String => StringKernels.pretokenCount(s)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.isNull} = ${if (legacySizeOfNull) "false" else c.isNull};
+      int ${ev.value} = ${c.isNull} ? -1 :
+        graft.expressions.StringKernels.pretokenCount(${c.value});""")
+  }
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
 /** Column-API surface for the custom expressions. */
 object TextExpressions {
   def textCount(c: Column, pat: String): Column =
@@ -270,4 +388,11 @@ object TextExpressions {
   def polyHash(c: Column): Column = toCol(PolyHash(toExpr(c)))
   def deflateLen(c: Column, level: Int = 6): Column =
     toCol(DeflateLen(toExpr(c), level))
+  // the three below read legacySizeOfNull when built, as Size does
+  def markerHits(toks: Column, set: Seq[String]): Column =
+    toCol(MarkerHits(toExpr(toks), set, SQLConf.get.legacySizeOfNull))
+  def langPredict(toks: Column, langs: Seq[(String, Seq[String])]): Column =
+    toCol(LangPredict(toExpr(toks), langs, SQLConf.get.legacySizeOfNull))
+  def pretokenCount(c: Column): Column =
+    toCol(PretokenCount(toExpr(c), SQLConf.get.legacySizeOfNull))
 }

@@ -74,9 +74,9 @@ object Dedup {
     // exact-verify self-join; without materialization Spark recomputes the
     // (expensive) shingle hashing for each branch. Signatures are small —
     // (id, hash-set, 16 minhashes), no text — so MEMORY_AND_DISK is safe
-    // at corpus scale; callers may unpersist after consuming the result.
-    val sig = minhashSignatures(docs, textCol, idCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // at corpus scale. The persist is owned by OpCaches: bounded by its LRU
+    // and dropped by OpCaches.clear(), never by the caller.
+    val sig = OpCaches.cached(minhashSignatures(docs, textCol, idCol, k))
     // band buckets: only (band, key) and id travel through this shuffle
     val bucketsAll = sig.select(col("id"),
       posexplode(bandKeys(col("m"))).as(Seq("band", "key")))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.DataFrame
   * the shared home for the r19 gate-path `persist` sites (triangleCounts /
   * pageRankFixedPoint edge+degree frames, groupedPrefixSums input,
   * Resample bucket aggregate, spearman's fact projection, the
-  * frequency-ordered jaccard prefix frame). Same design as the
+  * frequency-ordered jaccard prefix frame) and the minhash signature frame
+  * of `Dedup.minhashDupPairsWithStats`. Same design as the
   * [[TextOps]] span-frame registry (keyed by (session, analyzed-plan
   * semantic hash), LRU-bounded, stopped-session purge), generalized to any
   * operator intermediate.
@@ -35,7 +36,7 @@ object OpCaches {
     * real call chain (a gate that routes 2-3 frames per invocation, a few
     * gates interleaved by a bench pass) — overflow only costs a lazy
     * recompute on the evicted frame's next consumer. */
-  private val MaxFrames = 8
+  private[graft] val MaxFrames = 8
 
   private val frames = new java.util.LinkedHashMap[
     (org.apache.spark.sql.SparkSession, Int), DataFrame](16, 0.75f, true)

@@ -307,18 +307,35 @@ object TextOps {
     "en" -> StopEn, "de" -> StopDe, "es" -> StopEs,
     "fr" -> StopFr, "zh" -> StopZh)
 
-  /** Count of tokens belonging to a marker set (with multiplicity). */
-  def stopHits(toks: Column, set: Seq[String]): Column =
-    size(filter(toks, t => t.isin(set: _*)))
+  // ---- counting kernels of the text-quality gates. Byte contract: a
+  // token or document is compared and classified on its UTF-8 bytes, never
+  // decoded to a java.lang.String. Null contract: a null element is never
+  // counted, and a null array or string gives what `size(null)` gives under
+  // the session conf when the Column is built (-1 with
+  // spark.sql.legacy.sizeOfNull and ANSI off, else NULL). ----
 
-  /** Arg-max language by marker-hit count, first-listed wins ties. */
-  def langPredict(toks: Column): Column = {
-    val scores = LangOrder.map { case (l, set) => l -> stopHits(toks, set) }
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    scores.reverse.foldLeft(lit("und")) { case (acc, (l, s)) =>
-      when(s === best, lit(l)).otherwise(acc)
-    }
-  }
+  /** Count of tokens belonging to a marker set (with multiplicity), equal
+    * to `size(filter(toks, t => t.isin(set: _*)))`: byte-exact and
+    * case-sensitive ("The" is not the marker "the"), one pass per row. */
+  def stopHits(toks: Column, set: Seq[String]): Column =
+    graft.expressions.TextExpressions.markerHits(toks, set)
+
+  /** Arg-max language by marker-hit count over [[LangOrder]], every set
+    * counted in one pass; first-listed wins ties, so a row with no marker
+    * is "en". A null array is "und", or "en" where `size(null)` is -1
+    * (every set then scores -1). Never NULL. */
+  def langPredict(toks: Column): Column =
+    graft.expressions.TextExpressions.langPredict(toks, LangOrder)
+
+  /** BPE-ish pre-token count of a document, equal to
+    * `size(regexp_extract_all(text, "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]+", 0))`:
+    * the maximal runs of ASCII letters, of ASCII digits, or of other bytes
+    * except the space byte, counted in one pass over the UTF-8 bytes. Every
+    * byte >= 0x80 is an "other" byte, so a non-ASCII codepoint (or an
+    * invalid byte, which the regex sees as U+FFFD) joins the run it sits
+    * in; tab and newline are "other" bytes too. */
+  def pretokenCount(text: Column): Column =
+    graft.expressions.TextExpressions.pretokenCount(text)
 
   /** Per-ten-thousand resolution of the deterministic sampling hash. */
   val SampleMod = 10000L

@@ -139,9 +139,6 @@ object Streaming {
     * key cardinality — this is replay plumbing, not operator behavior
     * (results are partition-count invariant, which StreamsSpec pins). */
   private def statePartitionsFor(dir: String): Int = {
-    // probe hook only (never set by the driver): lets the phase probe
-    // A/B the state-partition clamp without recompiling
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt).foreach(return _)
     val f = new java.io.File(s"$dir/events.parquet")
     val bytes =
       if (f.isDirectory)

@@ -802,15 +802,16 @@ object TextPipeline {
               |WHERE hv < thr
               |GROUP BY lang ORDER BY lang""".stripMargin)),
 
-    // Token counting: whitespace words + a BPE-ish regex segmentation
-    // (GPT-2-style word/number/punct alternation — no lookaheads, so the
-    // JVM and RE2 regex engines agree) + chars-per-token, the budget
-    // metrics a training-data pipeline reports per document.
+    // Token counting: whitespace words + a BPE-ish segmentation
+    // (GPT-2-style word/number/punct alternation, counted by
+    // TextOps.pretokenCount; the oracle runs the same alternation as a
+    // regex, with no lookaheads, so RE2 and the byte counter agree) +
+    // chars-per-token, the budget metrics a training-data pipeline reports
+    // per document.
     "q_pipe_token_count" -> Q(
       (s, dir) => {
-        val bpeish = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]+"
         val nWs = size(split(col("text"), " "))
-        val nBpe = size(regexp_extract_all(col("text"), lit(bpeish), lit(0)))
+        val nBpe = pretokenCount(col("text"))
         docs(s, dir).select(
             col("doc_id"),
             nWs.as("n_ws_tokens"),

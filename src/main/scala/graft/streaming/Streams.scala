@@ -372,7 +372,11 @@ object Streams {
       try graft.queries.Streaming.deleteRecursively(ckpt)
       catch { case scala.util.control.NonFatal(_) => () }
     }
-    spark.table(unique)
+    // the frame holds the sink's rows through its plan; the session's temp
+    // view would hold them for the session's life
+    val out = spark.table(unique)
+    spark.catalog.dropTempView(unique)
+    out
   }
 
   /** Drain a FINITE stream to completion and return the result as a batch
@@ -381,8 +385,10 @@ object Streams {
     * bounded-replay face of the streaming surface — it lets a stream plan
     * be value-compared against a batch/oracle computation of the same
     * aggregation (the stream/batch parity gate). Table names are
-    * uniquified per run; the tiny memory sink holds only the AGGREGATED
-    * result, never the input. Checkpoints go to [[ScratchCkptRoot]] and
+    * uniquified per run, and the sink's temp view is dropped once the
+    * returned frame is taken, so the rows live only as long as the frame;
+    * the tiny memory sink holds only the AGGREGATED result, never the
+    * input. Checkpoints go to [[ScratchCkptRoot]] and
     * are removed when the drain ends. */
   def runToTable(df: DataFrame, name: String): DataFrame =
     drainTo(df, name, OutputMode.Complete())

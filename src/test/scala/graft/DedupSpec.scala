@@ -409,4 +409,22 @@ class DedupSpec extends SparkTestBase {
       assert(got === expect, s"frequencyOrdered=$freq")
     }
   }
+
+  test("minhash signature persists are bounded by OpCaches and released " +
+      "by OpCaches.clear()") {
+    val sc = spark.sparkContext
+    graft.operators.OpCaches.clear()
+    val before = sc.getPersistentRDDs.size
+    val d = spark.read.parquet(s"$sf0001/documents.parquet")
+    for (i <- 0 until 10) {
+      Dedup.minhashDupPairs(d.filter(col("doc_id") % 10 =!= i),
+        "text", "doc_id", 3, 0.8).count()
+      assert(graft.operators.OpCaches.frameCount <=
+        graft.operators.OpCaches.MaxFrames)
+      assert(sc.getPersistentRDDs.size - before <=
+        graft.operators.OpCaches.MaxFrames, s"call $i")
+    }
+    graft.operators.OpCaches.clear()
+    assert(sc.getPersistentRDDs.size === before)
+  }
 }

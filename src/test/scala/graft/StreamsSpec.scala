@@ -299,6 +299,20 @@ class StreamsSpec extends SparkTestBase {
     }
   }
 
+  test("a gate drain drops its memory-sink view once the frame is taken; " +
+      "the frames keep their rows") {
+    def views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("stream_quality_parity")).toSeq
+    val before = views
+    val first = SparkEntry.queries("q_stream_quality_parity")(spark, sf0001)
+    val second = SparkEntry.queries("q_stream_quality_parity")(spark, sf0001)
+    assert(views === before, "a drain left its temp view registered")
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet").count()
+    val a = first.collect().toSeq
+    assert(a.size === docs)
+    assert(second.collect().toSeq === a)
+  }
+
   test("session gate output is state-store-provider invariant: RocksDB " +
       "(the production residency choice — off-heap native memory + local " +
       "SST files instead of the default provider's on-heap map) produces " +

@@ -103,6 +103,25 @@ class StringExpressionsSpec extends SparkTestBase {
     assert(one("", graft.expressions.TextExpressions.polyHash($"s")) === 0L)
   }
 
+  test("stopHits, langPredict and pretokenCount in a session plan; a null " +
+      "input gives what size(null) gives") {
+    import graft.operators.TextOps
+    val df = Seq(
+        (1, Seq("the", "The", "la", null, "de", "la"), "Hi, 42 worlds!\tok"),
+        (2, null, null),
+        (3, Seq("der", "die", "le", "les", ""), ""))
+      .toDF("id", "toks", "text")
+    val sizeOfNull = df.filter($"id" === 2).select(size($"toks")).head.get(0)
+    val got = df.orderBy("id").select(TextOps.stopHits($"toks", TextOps.StopEn),
+        TextOps.langPredict($"toks"), TextOps.pretokenCount($"text"))
+      .collect().map(r => (r.get(0), r.get(1), r.get(2))).toSeq
+    // "The" is not a marker; "la" is es and fr, "de" es: es 3, fr 2
+    // de 2 ties fr 2 on row 3, and de is listed first
+    assert(got === Seq((1, "es", 6),
+      (sizeOfNull, if (sizeOfNull == null) "und" else "en", sizeOfNull),
+      (0, "de", 0)))
+  }
+
   test("textRFind: last occurrence, codepoint index, -1 if absent") {
     assert(one("banana", textRFind($"s", "na")) === 4)
     assert(one("banana", textRFind($"s", "a")) === 5)

@@ -260,18 +260,15 @@ object Bench {
         val buf = collected.getOrElseUpdate(name,
           scala.collection.mutable.ArrayBuffer.empty)
         (1 to samplesPerQuery).foreach { _ =>
-          // PER-SAMPLE CACHE STATE (r19 verdict item 1): operator-internal
-          // multi-consumer persists are registered in OpCaches; clearing
-          // the registry here (blocking, OUTSIDE the timed window)
-          // guarantees no timed sample ever reads an InMemoryRelation
-          // built by the untimed warmup or a previous sample — each
-          // sample recomputes AND re-persists those frames inside its own
-          // timed window, so the reported minimum is a cold-query time
-          // with respect to every registered frame. (The TextOps
-          // span-frame LRU and the prepared-corpus frames keep their
-          // established cross-run lifecycle — disclosed, pre-r19
-          // semantics — and are NOT cleared here.) TableMemo stays warm on
-          // purpose: a long-lived session resolves each table once.
+          // PER-SAMPLE CACHE STATE: every frame graft persists beyond one
+          // call is registered in OpCaches (the minhash and span frames,
+          // the prepared ANN corpus, the jaccard sets); clearing the
+          // registry here (blocking, OUTSIDE the timed window) guarantees
+          // no timed sample ever reads an InMemoryRelation built by the
+          // untimed warmup or a previous sample — each sample recomputes
+          // AND re-persists those frames inside its own timed window, so
+          // the reported minimum is a cold-query time. TableMemo stays
+          // warm on purpose: a long-lived session resolves each table once.
           graft.operators.OpCaches.clear()
           resetPeaks()
           val c0 = osBean.getProcessCpuTime

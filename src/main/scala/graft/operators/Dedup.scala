@@ -144,9 +144,9 @@ object Dedup {
   def dedupAgainstIndex(newDocs: DataFrame, textCol: String, idCol: String,
       k: Int, threshold: Double, index: DataFrame,
       corpus: DataFrame): DataFrame = {
-    // persisted: feeds both the probe branch and the verify join
-    val sigNew = minhashSignatures(newDocs, textCol, idCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // registered: feeds both the probe branch and the verify join
+    val sigNew =
+      OpCaches.cached(minhashSignatures(newDocs, textCol, idCol, k))
     val probe = sigNew.select(col("id").as("new_id"),
       posexplode(bandKeys(col("m"))).as(Seq("band", "key")))
     val cand = probe.join(
@@ -197,18 +197,6 @@ object Dedup {
     * relax+pointer-jump loop instead of trusting it. */
   def dupGroupsWithStats(pairs: DataFrame, maxIter: Int = 20,
       driverEdgeLimit: Long = 2000000L): (DataFrame, Int) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Iteration durability: localCheckpoint blocks live on executors, so on
-    // a real cluster losing one executor mid-iteration fails the job. When
-    // the session has a reliable checkpoint dir configured (HDFS/object
-    // store via sc.setCheckpointDir), use true checkpoint()s instead —
-    // labels are tiny (two longs per vertex), so the per-round write is
-    // cheap insurance at 100 TB. Locally (no dir set) localCheckpoint is
-    // the right call: same plan-truncation effect, no disk round-trip.
-    def truncate(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(true)
-      else df.localCheckpoint(true)
     // ADAPTIVE strategy (the broadcast-join-threshold pattern): the dup-pair
     // graph is usually orders of magnitude smaller than the corpus — near-dup
     // clusters are sparse. Below the edge limit (~32 MB of longs), a driver
@@ -229,43 +217,69 @@ object Dedup {
     // what a driver collect could ever hold skips the probe entirely (no
     // silent union-find over a TRUNCATED edge set — dropped edges would
     // split components and produce wrong dedup decisions).
-    val p = pairs.persist(lvl)
-    val probeable = driverEdgeLimit < Int.MaxValue.toLong - 1
-    val probe: Array[org.apache.spark.sql.Row] =
-      if (probeable)
-        p.select(col("id1"), col("id2"))
-          .limit(driverEdgeLimit.toInt + 1).collect()
-      else Array.empty
-    if (probeable && probe.length <= driverEdgeLimit) {
-      val spark = pairs.sparkSession
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
+    OpCaches.withPersisted(pairs) { p =>
+      val probeable = driverEdgeLimit < Int.MaxValue.toLong - 1
+      val probe: Array[org.apache.spark.sql.Row] =
+        if (probeable)
+          p.select(col("id1"), col("id2"))
+            .limit(driverEdgeLimit.toInt + 1).collect()
+        else Array.empty
+      if (probeable && probe.length <= driverEdgeLimit)
+        (unionFind(pairs.sparkSession, probe), 0)
+      else {
+        // eager count before the union: it scans p twice CONCURRENTLY, and
+        // two racing scans of a partially-cached frame each recompute
+        // uncached partitions; the count reuses everything the probe
+        // already cached
+        p.count()
+        OpCaches.withPersisted(
+            p.select(col("id1").as("a"), col("id2").as("b"))
+              .union(p.select(col("id2").as("a"), col("id1").as("b"))))(
+          labelRounds(_, maxIter))
       }
-      probe.foreach { row =>
-        val (a, b) = (row.getLong(0), row.getLong(1))
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { // union by min: keeper is the smallest id
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      p.unpersist()
-      val rows = parent.keys.toSeq.sorted.map(id => (id, find(id)))
-      import spark.implicits._
-      return (rows.toDF("id", "keeper"), 0)
     }
-    // eager count before the union: it scans p twice CONCURRENTLY, and two
-    // racing scans of a partially-cached frame each recompute uncached
-    // partitions; the count reuses everything the probe already cached
-    p.count()
-    val edges = p.select(col("id1").as("a"), col("id2").as("b"))
-      .union(p.select(col("id2").as("a"), col("id1").as("b")))
-      .persist(lvl)
+  }
+
+  /** Min-id components of a driver-held edge list (union by min, path
+    * compression): the keeper of every vertex is its component's min id. */
+  private def unionFind(spark: org.apache.spark.sql.SparkSession,
+      edges: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x // path compression
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    edges.foreach { row =>
+      val (a, b) = (row.getLong(0), row.getLong(1))
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { // union by min: keeper is the smallest id
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    val rows = parent.keys.toSeq.sorted.map(id => (id, find(id)))
+    import spark.implicits._
+    rows.toDF("id", "keeper")
+  }
+
+  /** The distributed branch of [[dupGroupsWithStats]]: relax + pointer-jump
+    * rounds over the symmetric edge frame (a, b) until no label moves. */
+  private def labelRounds(edges: DataFrame,
+      maxIter: Int): (DataFrame, Int) = {
+    // Iteration durability: localCheckpoint blocks live on executors, so on
+    // a real cluster losing one executor mid-iteration fails the job. When
+    // the session has a reliable checkpoint dir configured (HDFS/object
+    // store via sc.setCheckpointDir), use true checkpoint()s instead —
+    // labels are tiny (two longs per vertex), so the per-round write is
+    // cheap insurance at 100 TB. Locally (no dir set) localCheckpoint is
+    // the right call: same plan-truncation effect, no disk round-trip.
+    def truncate(df: DataFrame): DataFrame =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+        df.checkpoint(true)
+      else df.localCheckpoint(true)
     // localCheckpoint per round: labels feeds THREE places each round
     // (neighbor join, relax join, pointer-jump), so a lazy plan would
     // double per iteration — exponential logical-plan growth is the classic
@@ -294,8 +308,6 @@ object Dedup {
       labels = jumped.select(col("id"), col("label"))
       iter += 1
     }
-    edges.unpersist()
-    p.unpersist()
     // Exiting on the iteration cap with labels still moving means the
     // component labeling is WRONG (split components → wrong dedup
     // decisions), and dupGroups discards the iteration count — so a
@@ -370,8 +382,7 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
       blockCol: String, threshold: Double,
       frequencyOrdered: Boolean = false): DataFrame =
-    jaccardPlan(docs, textCol, idCol, blockCol, threshold, frequencyOrdered,
-      persistCand = false)._2
+    jaccardPlan(docs, textCol, idCol, blockCol, threshold, frequencyOrdered)._2
 
   /** Prefix-filter effectiveness audit: how many candidate pairs the
     * (block, prefix-token) join emitted vs how many survived the exact
@@ -384,33 +395,34 @@ object Dedup {
     * as a candidate count far above the verified count under hash order,
     * and the frequency order collapses the candidates (never the output:
     * both orders are lossless, so `verified` is identical). The returned
-    * DataFrame is persisted (the counts already materialized it); callers
-    * may unpersist after consuming. */
+    * DataFrame is registered in [[OpCaches]] (the counts already
+    * materialized it). */
   def ngramJaccardPairsWithStats(docs: DataFrame, textCol: String,
       idCol: String, blockCol: String, threshold: Double,
       frequencyOrdered: Boolean = false): (DataFrame, JaccardJoinStats) = {
     val (cand, out) = jaccardPlan(docs, textCol, idCol, blockCol, threshold,
-      frequencyOrdered, persistCand = true)
-    val nCand = cand.count()
-    val res = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nVerified = res.count()
-    cand.unpersist()
-    (res, JaccardJoinStats(nCand, nVerified))
+      frequencyOrdered)
+    // `out` embeds `cand`'s plan, and Spark swaps in cached data when a plan
+    // first executes, so the verify count reads the persisted candidates
+    OpCaches.withPersisted(cand) { cand =>
+      val nCand = cand.count()
+      val res = OpCaches.cached(out)
+      (res, JaccardJoinStats(nCand, res.count()))
+    }
   }
 
   /** Shared prefix-filter join plan, returning (candidate-pair set,
-    * verified output). `persistCand` caches the candidate set so an eager
-    * count and the downstream verify share one computation. */
+    * verified output). */
   private def jaccardPlan(docs: DataFrame, textCol: String, idCol: String,
-      blockCol: String, threshold: Double, frequencyOrdered: Boolean,
-      persistCand: Boolean): (DataFrame, DataFrame) = {
-    // persisted: the prefix branch and both verify joins would otherwise
+      blockCol: String, threshold: Double,
+      frequencyOrdered: Boolean): (DataFrame, DataFrame) = {
+    // registered: the prefix branch and both verify joins would otherwise
     // re-hash the corpus (same pattern as minhashDupPairs)
-    val withSets = docs.select(col(idCol).as("id"), col(blockCol).as("block"),
-      array_distinct(transform(tokens(col(textCol)), t =>
-        graft.expressions.TextExpressions.polyHash(t))).as("h"))
-      .withColumn("sz", size(col("h")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val withSets = OpCaches.cached(docs.select(col(idCol).as("id"),
+        col(blockCol).as("block"),
+        array_distinct(transform(tokens(col(textCol)), t =>
+          graft.expressions.TextExpressions.polyHash(t))).as("h"))
+      .withColumn("sz", size(col("h"))))
     // prefix length p = |h| − ⌈τ·|h|⌉ + 1 under the chosen total order;
     // the 1e-9 guard only ever LENGTHENS the prefix (safe direction for FP).
     val prefixLen = (col("sz") -
@@ -450,7 +462,7 @@ object Dedup {
           .select(col("id"), col("block"), col("sz"), col("tok"),
             col("__rk").as("pos")))
       }
-    val cand0 = pre.as("a").join(pre.as("b"),
+    val cand = pre.as("a").join(pre.as("b"),
         col("a.block") === col("b.block") && col("a.tok") === col("b.tok") &&
           col("a.id") < col("b.id") &&
           // size filter: J ≥ τ ⇒ τ·|a| ≤ |b| ≤ |a|/τ (ε-guards widen only)
@@ -472,10 +484,6 @@ object Dedup {
               (col("a.sz") + col("b.sz")) - lit(1e-9)))
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
-    val cand =
-      if (persistCand)
-        cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else cand0
     val h = withSets.select(col("id"), col("block"), col("h"))
     val out = cand
       .join(h.select(col("id").as("id1"), col("block"),

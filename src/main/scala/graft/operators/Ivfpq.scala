@@ -156,12 +156,11 @@ object Ivfpq {
   def knnIvfPq(emb: DataFrame, vecCol: String, idCol: String,
       queryIds: Seq[Long], k: Int, nCells: Int, m: Int, kSub: Int,
       nProbe: Int, rerank: Int, lloydIters: Int = 3): DataFrame = {
-    val corpus = Similarity.prepared(emb, vecCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (cents, cbs) = train(corpus, nCells, m, kSub, lloydIters)
-      knnIvfPqFrom(corpus, cents, cbs, queryIds, k, nProbe, rerank)
-        .localCheckpoint(true)
-    } finally corpus.unpersist()
+    OpCaches.withPersisted(Similarity.prepared(emb, vecCol, idCol)) {
+      corpus =>
+        val (cents, cbs) = train(corpus, nCells, m, kSub, lloydIters)
+        knnIvfPqFrom(corpus, cents, cbs, queryIds, k, nProbe, rerank)
+          .localCheckpoint(true)
+    }
   }
 }

@@ -169,9 +169,8 @@ object Pq {
       queryIds: Seq[Long], k: Int, m: Int, numCents: Int,
       lloydIters: Int = 2, rerank: Int = 0): DataFrame = {
     val corpus = Similarity.prepared(emb, vecCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cbs = try trainCodebooks(corpus, m, numCents, lloydIters)
-              finally corpus.unpersist()
+    val cbs = OpCaches.withPersisted(corpus)(
+      trainCodebooks(_, m, numCents, lloydIters))
     knnPqFrom(corpus, cbs, queryIds, k, rerank)
   }
 

@@ -33,7 +33,13 @@ object Profile {
     *
     * Cost: one keyed count aggregate per side (map-side partial) + one
     * full-outer join of the two COUNT tables (distinct-key-sized, never
-    * row-sized) + a 1-row reduce. All counts are exact BIGINTs. */
+    * row-sized) + a 1-row reduce. All counts are exact BIGINTs.
+    *
+    * `join_rows` is `sum(cl * cr)` in LONG, computed in that final 1-row
+    * reduce over the joined count tables (each product per matched key,
+    * then the partial and final sums). It is exact up to 2⁶³ − 1 joined
+    * rows; past that, Spark's ANSI mode fails the query with an overflow
+    * error rather than returning a wrapped count. */
   def joinStats(left: DataFrame, leftKey: String,
       right: DataFrame, rightKey: String): DataFrame = {
     val cl = left.groupBy(col(leftKey).as("__js_k"))

@@ -482,9 +482,8 @@ object Similarity {
       queryIds: Seq[Long], k: Int, numCentroids: Int,
       lloydIters: Int = 3, nProbe: Int = 1): DataFrame = {
     val corpus = prepared(emb, vecCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = try kmeansDriver(corpus, numCentroids, lloydIters)
-                finally corpus.unpersist()
+    val cents = OpCaches.withPersisted(corpus)(
+      kmeansDriver(_, numCentroids, lloydIters))
     knnIvfFrom(corpus, cents, queryIds, k, nProbe)
   }
 
@@ -810,24 +809,21 @@ object Similarity {
     * corpus — shared by the flat ([[semDedupDecisions]]) and bucketed
     * ([[semDedupAuto]]) assignment paths. */
   private def semDedupFrom(assignedIn: DataFrame,
-      threshold: Double): DataFrame = {
-    val assigned = assignedIn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = assigned.as("a").join(assigned.as("b"),
-        col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
-      .filter(cosine(col("a.v"), col("a.nrm"), col("b.v"), col("b.nrm"))
-        >= threshold)
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-    val groups = Dedup.dupGroups(pairs)
-      .withColumnRenamed("keeper", "grp_keeper")
-    val out = assigned.select(col("id"), col("cell"))
-      .join(groups, Seq("id"), "left")
-      .select(col("id"), col("cell"),
-        coalesce(col("grp_keeper"), col("id")).as("keeper"),
-        (coalesce(col("grp_keeper"), col("id")) === col("id")).as("keep"))
-    assigned.unpersist()
-    out
-  }
+      threshold: Double): DataFrame =
+    OpCaches.withPersisted(assignedIn) { assigned =>
+      val pairs = assigned.as("a").join(assigned.as("b"),
+          col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
+        .filter(cosine(col("a.v"), col("a.nrm"), col("b.v"), col("b.nrm"))
+          >= threshold)
+        .select(col("a.id").as("id1"), col("b.id").as("id2"))
+      val groups = Dedup.dupGroups(pairs)
+        .withColumnRenamed("keeper", "grp_keeper")
+      assigned.select(col("id"), col("cell"))
+        .join(groups, Seq("id"), "left")
+        .select(col("id"), col("cell"),
+          coalesce(col("grp_keeper"), col("id")).as("keeper"),
+          (coalesce(col("grp_keeper"), col("id")) === col("id")).as("keep"))
+    }
 
   /** Matryoshka / adaptive retrieval (Kusupati et al. 2022, "Matryoshka
     * Representation Learning" §4.3 shape): the full corpus scan scores
@@ -956,19 +952,16 @@ object Similarity {
     * the 100 M-row/5000-cell operating point. */
   def semDedupAuto(corpus: DataFrame, threshold: Double,
       targetCellSize: Long = 5000L,
-      lloydIters: Int = 2): SemDedupAutoModel = {
-    // no persist here: gate callers hand in an already-cached corpus
-    // (preparedCorpus keeps its cache for the decision plan's later
-    // scans), and persisting the same plan again would let an unpersist
-    // evict it mid-gate. Production callers own their corpus lifecycle.
-    val k = semDedupAutoK(corpus.count(), targetCellSize)
-    val cents = kmeansDriver(corpus, k, lloydIters,
-      Some(assignCellsBucketed(_, _)))
-    val (groups, cid2gid) = groupCentroids(cents,
-      centroidGroupCount(cents.size))
-    val assigned = assignCellsGrouped(corpus, cents, groups, cid2gid,
-      GroupProbes)
-    SemDedupAutoModel(cents, cid2gid, groups, GroupProbes,
-      semDedupFrom(assigned, threshold))
-  }
+      lloydIters: Int = 2): SemDedupAutoModel =
+    OpCaches.withPersisted(corpus) { corpus =>
+      val k = semDedupAutoK(corpus.count(), targetCellSize)
+      val cents = kmeansDriver(corpus, k, lloydIters,
+        Some(assignCellsBucketed(_, _)))
+      val (groups, cid2gid) = groupCentroids(cents,
+        centroidGroupCount(cents.size))
+      val assigned = assignCellsGrouped(corpus, cents, groups, cid2gid,
+        GroupProbes)
+      SemDedupAutoModel(cents, cid2gid, groups, GroupProbes,
+        semDedupFrom(assigned, threshold))
+    }
 }

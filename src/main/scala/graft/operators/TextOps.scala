@@ -17,85 +17,6 @@ object TextOps {
 
   val PolyMod = 1000000007L
 
-  /** Bounded LRU registry of the extent frames [[winnowingSharedSpans]]
-    * has persisted, keyed by (session, analyzed-plan semantic hash).
-    * Three invariants (each spec-pinned in DedupSpec):
-    *   - repeated invocations over the SAME corpus re-find the persisted
-    *     frame instead of dropping and re-registering it (the r16 single
-    *     slot paid a full recompute per invocation);
-    *   - two INTERLEAVED corpora each keep their cache benefit (the r16
-    *     slot silently unpersisted the other's frame on every call);
-    *   - at most [[MaxCachedSpanFrames]] frames are ever pinned — the
-    *     least-recently-used is unpersisted on overflow (correctness-safe:
-    *     an unpersisted plan lazily recomputes), so a long bench session
-    *     cannot accumulate cached copies.
-    * All mutation runs under the map's lock: the r16 getAndSet/unpersist/
-    * persist sequence was not atomic, so two concurrent calls could leave
-    * a persisted frame untracked (and so never unpersisted). */
-  private val MaxCachedSpanFrames = 2
-  private val cachedSpans = new java.util.LinkedHashMap[
-    (org.apache.spark.sql.SparkSession, Int),
-    org.apache.spark.sql.DataFrame](4, 0.75f, true)
-  /** Cache-registry hits — the observability hook DedupSpec uses to prove
-    * interleaved corpora each retain their frame. */
-  private[graft] val spanCacheHits =
-    new java.util.concurrent.atomic.AtomicLong(0)
-  private[graft] def cachedSpanFrameCount: Int =
-    cachedSpans.synchronized(cachedSpans.size)
-
-  /** Unpersist is best-effort registry hygiene, never correctness (an
-    * unpersisted plan lazily recomputes) — and calling it on a frame whose
-    * SparkContext has STOPPED throws, which must not fail the unrelated
-    * live-session call that triggered the eviction. */
-  private def safeUnpersist(df: org.apache.spark.sql.DataFrame): Unit = {
-    scala.util.Try(df.unpersist(blocking = false)): Unit
-  }
-
-  /** Drop every registry entry whose owning session is stopped (r17
-    * verdict item: a stopped session's frame stayed registered — pinning
-    * the dead session against GC — until two newer entries evicted it).
-    * Runs at each registry access, so the registry is self-cleaning
-    * without a listener thread. The predicate is injectable ONLY for the
-    * spec: a JVM allows one active SparkContext, so a test cannot stop a
-    * real second session without killing the shared suite session. */
-  private[graft] def purgeStoppedSessions(
-      isStopped: org.apache.spark.sql.SparkSession => Boolean =
-        _.sparkContext.isStopped): Unit = cachedSpans.synchronized {
-    val it = cachedSpans.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (isStopped(e.getKey._1)) { it.remove(); safeUnpersist(e.getValue) }
-    }
-  }
-
-  private def cachedSpanFrame(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = cachedSpans.synchronized {
-    purgeStoppedSessions()
-    val analyzed = df.queryExecution.analyzed
-    val key = (df.sparkSession, analyzed.semanticHash())
-    val hit = cachedSpans.get(key) // get() refreshes LRU access order
-    // sameResult confirms the 32-bit hash: a collision between two
-    // distinct corpora must be a REPLACE, never a silent wrong-corpus
-    // serve. (A source file regenerated in place mid-JVM re-lists at
-    // read time into a different relation snapshot → different plan →
-    // miss; an identical snapshot serving the cached frame is the same
-    // contract as Spark's own persist.)
-    if (hit != null && hit.queryExecution.analyzed.sameResult(analyzed)) {
-      spanCacheHits.incrementAndGet(); hit
-    } else {
-      if (hit != null) safeUnpersist(hit)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cachedSpans.put(key, df)
-      if (cachedSpans.size > MaxCachedSpanFrames) {
-        val it = cachedSpans.entrySet().iterator()
-        val eldest = it.next()
-        it.remove()
-        safeUnpersist(eldest.getValue)
-      }
-      df
-    }
-  }
-
   /** MinHash affine family h_j(x) = (A(j)·x + B(j)) mod P — 16 functions,
     * 4 bands × 4 rows (standard LSH banding for τ ≈ 0.5-0.8). */
   val HashA: Seq[Long] = Seq(3L, 5L, 7L, 11L, 13L, 17L, 19L, 23L,
@@ -220,32 +141,24 @@ object TextOps {
     * longs; AQE broadcasts the capped-df fp list when small. The lazy
     * plan references the per-(doc, fp) extent frame from THREE consumers
     * (the df aggregate and both join sides), and exchange reuse does not
-    * dedupe them across the self-join's aliasing — so with
-    * `cache = true` (default) that frame is persisted MEMORY_AND_DISK
-    * and the text-side array pass runs ONCE per action instead of three
+    * dedupe them across the self-join's aliasing — so that frame is
+    * persisted MEMORY_AND_DISK and the text-side array pass runs ONCE per action instead of three
     * times (the r15 sf1 probe's ×3.9 wall at ×10 data included the
     * recompute). The cached frame is 4 longs per (doc, fp) — a vanishing
     * fraction of the corpus — spills to disk under pressure, and keeps
     * its lineage (fault-tolerant recompute on a real cluster, unlike a
-    * local checkpoint). Cached frames are SCOPED per input plan via the
-    * bounded [[cachedSpans]] LRU registry: repeated invocations over one
-    * corpus reuse the persisted frame, interleaved corpora each keep
-    * theirs, and at most [[MaxCachedSpanFrames]] frames are ever pinned
-    * (the LRU one is unpersisted on overflow — correctness-safe, lazy
-    * recompute). `cache = false` is the pure-lazy spelling (results are
-    * identical — spec-pinned). */
+    * local checkpoint). It is registered in [[OpCaches]]: repeated
+    * invocations over one corpus reuse the persisted frame, and the
+    * registry bounds how many such frames stay pinned. */
   def winnowingSharedSpans(docs: DataFrame, textCol: String, idCol: String,
-      k: Int, w: Int, maxDf: Int, cache: Boolean = true): DataFrame = {
+      k: Int, w: Int, maxDf: Int): DataFrame = {
     require(maxDf >= 2, s"maxDf must be >= 2 (a shared fp needs 2 docs), " +
       s"got $maxDf")
     val fps = winnowingFingerprints(docs, textCol, idCol, k, w)
     // ONE row per (doc, fp) with its positional extent — this collapse is
     // what makes the self-join immune to within-doc multiplicity
-    val docFpLazy = fps.groupBy(col("doc_id"), col("fp"))
-      .agg(min(col("pos")).as("pmin"), max(col("pos")).as("pmax"))
-    val docFp =
-      if (cache) cachedSpanFrame(docFpLazy)
-      else docFpLazy
+    val docFp = OpCaches.cached(fps.groupBy(col("doc_id"), col("fp"))
+      .agg(min(col("pos")).as("pmin"), max(col("pos")).as("pmax")))
     val rare = docFp.join(
       docFp.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
         .filter(col("__df") <= maxDf).select(col("fp")),

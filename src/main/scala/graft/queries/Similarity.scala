@@ -296,26 +296,16 @@ object Similarity {
        |FROM assign a LEFT JOIN comp g ON g.id = a.id
        |ORDER BY a.id""".stripMargin
 
-  /** Prepared gate corpus, persisted WITHOUT an unpersist: the returned
-    * frame feeds BOTH the eager training collects inside the trainOnly
-    * helpers AND the lazy search plan the gate hands back (which scans it
-    * up to three times — coding, query fetch, re-rank fetch). The r12
-    * spelling unpersisted right after training, so every one of those
-    * search scans re-derived the prepared/norm lineage — the ADVICE
-    * finding knnIvfPq fixed for a path with no callers while the live
-    * gate path kept the bug. No unpersist is deliberate and safe here:
-    * the prepared gate corpus is ~|embeddings|·dim doubles (about a
-    * megabyte at bench scale), cached entries are evicted by Spark's
-    * unified memory manager under pressure and released by the
-    * ContextCleaner once the frame is unreachable, and re-invocations of
-    * the same gate re-find the same cached plan (the "already cached"
-    * CacheManager warning, not a second copy). Production callers sizing
-    * real corpora manage their own lifecycle (see knnIvfPq's
-    * consume-then-release pattern). */
+  /** Prepared gate corpus, registered in [[graft.operators.OpCaches]]:
+    * the returned frame feeds BOTH the eager training collects inside the
+    * trainOnly helpers AND the lazy search plan the gate hands back (which
+    * scans it up to three times — coding, query fetch, re-rank fetch), so
+    * it must outlive the training call. Re-invocations of the same gate
+    * re-find the registered frame. */
   private def preparedCorpus(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    Sim.prepared(tbl(s, dir, "embeddings"), "embedding", "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    graft.operators.OpCaches.cached(
+      Sim.prepared(tbl(s, dir, "embeddings"), "embedding", "vec_id"))
 
   /** PQ training without the oracle side-table dump — the recall panel's
     * entry (training is deterministic, so panel and gate score with

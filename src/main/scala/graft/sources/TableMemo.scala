@@ -26,8 +26,7 @@ object TableMemo {
   /** `spark.read.parquet(path)`, resolved once per session and fingerprint. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val key = (spark, path)
-    val fp = files(spark, path).map(_.map(f =>
-      s"${f.getPath}:${f.getLen}:${f.getModificationTime}").sorted.mkString(","))
+    val fp = files(spark, path).map(fingerprint)
     val hit = entries.synchronized {
       entries.keySet.removeIf(_._1.sparkContext.isStopped)
       Option(entries.get(key)).filter(e => fp.contains(e.fp))
@@ -42,6 +41,13 @@ object TableMemo {
       df
     }(e => Bridge.planToDf(spark, e.relation.newInstance()))
   }
+
+  /** The name:size:mtime of every file, in path order: it changes when a
+    * file is added, removed, or rewritten with a new size or mtime. Shared
+    * with the frame registry, which validates its hits with it. */
+  private[graft] def fingerprint(files: Seq[FileStatus]): String =
+    files.map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      .sorted.mkString(",")
 
   /** Every file under `path`, recursively; None if any part is unlistable. */
   private[graft] def files(spark: SparkSession, path: String)

@@ -3,6 +3,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.operators.OpCaches
 
 /** Super-linear-tail probe: run the slow-tail gates ONCE at the scaled-up
   * sf1 directory ([[ScaleUp]] output) and record wall time + exchange
@@ -120,11 +121,9 @@ object Sf1Probe {
     // target-cell-size; running the OPERATOR with k scaled 10x alongside
     // shows the same workload goes back to linear-ish.
     def semdedupK(dir: String, k: Int): Double = {
-      val corpus = graft.operators.Similarity
-        .prepared(graft.queries.tbl(spark, dir, "embeddings"),
-          "embedding", "vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      OpCaches.withPersisted(graft.operators.Similarity
+          .prepared(graft.queries.tbl(spark, dir, "embeddings"),
+            "embedding", "vec_id")) { corpus =>
         val t0 = System.nanoTime()
         val cents = graft.operators.Similarity
           .kmeansCentroidsSeq(corpus, k, lloydIters = 2)
@@ -133,7 +132,7 @@ object Sf1Probe {
         df.agg(bit_xor(xxhash64(struct(
           df.columns.toIndexedSeq.map(col): _*)))).collect()
         (System.nanoTime() - t0) / 1e9
-      } finally corpus.unpersist()
+      }
     }
     semdedupK(sf01, 8) // warm
     val sdBase = semdedupK(sf01, 8)
@@ -283,10 +282,8 @@ object Sf1Probe {
     def pqSublinear(dir: String, m: Int, cents: Int)
         : (Double, Int, Double) = {
       val emb = graft.queries.tbl(spark, dir, "embeddings")
-      val corpus = graft.operators.Similarity
-        .prepared(emb, "embedding", "vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      OpCaches.withPersisted(graft.operators.Similarity
+          .prepared(emb, "embedding", "vec_id")) { corpus =>
         val k = 5
         val breadth = graft.operators.Pq
           .rerankBreadthSublinear(corpus.count(), k)
@@ -301,7 +298,7 @@ object Sf1Probe {
           emb, "embedding", "vec_id", panel, k))
         val recall = ProbeUtil.recallOf(brute, ann)
         (sec, breadth, recall)
-      } finally corpus.unpersist()
+      }
     }
     pqSublinear(sf01, 16, 32) // warm
     val (pqsBase, pqsBreadth01, pqsRec01) = pqSublinear(sf01, 16, 32)
@@ -368,11 +365,9 @@ object Sf1Probe {
     // first run measured a wash, 2.72s vs 2.67s); k=512 is where the
     // n*k term separates (4*sqrt(512) ~ 90 vs 512 dots per row).
     def lloyd(dir: String, k: Int, flat: Boolean): Double = {
-      val corpus = graft.operators.Similarity
-        .prepared(graft.queries.tbl(spark, dir, "embeddings"),
-          "embedding", "vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      OpCaches.withPersisted(graft.operators.Similarity
+          .prepared(graft.queries.tbl(spark, dir, "embeddings"),
+            "embedding", "vec_id")) { corpus =>
         corpus.count()
         val t0 = System.nanoTime()
         if (flat)
@@ -382,7 +377,7 @@ object Sf1Probe {
           graft.operators.Similarity.kmeansCentroidsSeq(
             corpus, k, lloydIters = 2)
         (System.nanoTime() - t0) / 1e9
-      } finally corpus.unpersist()
+      }
     }
     lloyd(sf01, 128, flat = false) // warm
     val lbBase = lloyd(sf01, 128, flat = false)
@@ -423,11 +418,9 @@ object Sf1Probe {
            else concat(col("s_name"), lit(s"~$i$i"))).as("s_name"))
       }.reduce(_ unionAll _)
       val t0 = System.nanoTime()
-      val edges = graft.operators.Fuzzy
-        .edSelfJoin(scaled, "s_suppkey", "s_name")
-        .select(col("id1"), col("id2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      OpCaches.withPersisted(graft.operators.Fuzzy
+          .edSelfJoin(scaled, "s_suppkey", "s_name")
+          .select(col("id1"), col("id2"))) { edges =>
         val nEdges = edges.count()
         val pr = graft.operators.Graph
           .pageRankFixedPoint(edges, "id1", "id2", iters = 3)
@@ -437,7 +430,7 @@ object Sf1Probe {
         tc.agg(bit_xor(xxhash64(struct(
           tc.columns.toIndexedSeq.map(col): _*)))).collect()
         ((System.nanoTime() - t0) / 1e9, nEdges)
-      } finally edges.unpersist()
+      }
     }
     graphStack(1) // warm
     val (g1, e1) = graphStack(1)

@@ -23,14 +23,14 @@ class LayoutMatrixSpec extends SparkTestBase {
     * count + SUM of per-row xxhash64 over every output column, accumulated
     * in decimal(38,0) so ANSI long-overflow can't throw. XOR would let any
     * layout bug that duplicates rows an even number of times cancel out;
-    * a sum only collides if hash deltas cancel exactly. */
+    * a sum only collides if hash deltas cancel exactly. One aggregate
+    * computes both, so each gate executes once per layout; an empty
+    * result gives (0, null). */
   private def fingerprint(df: DataFrame): (Long, Any) = {
-    val n = df.count()
-    val h =
-      if (n == 0) null
-      else df.agg(sum(xxhash64(struct(df.columns.map(col): _*))
-        .cast("decimal(38,0)"))).head.get(0)
-    (n, h)
+    val r = df.agg(count(lit(1)),
+      sum(xxhash64(struct(df.columns.map(col): _*)).cast("decimal(38,0)")))
+      .head
+    (r.getLong(0), r.get(1))
   }
 
   private def withLayout[A](layout: DataFrame => DataFrame)(body: => A): A =

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{AsofJoin, Dedup, RangeJoin}
+import graft.operators.{AsofJoin, Dedup, OpCaches, RangeJoin}
 import org.apache.spark.sql.functions.col
 import scala.util.Random
 
@@ -2147,6 +2147,14 @@ class RandomizedParitySpec extends SparkTestBase {
   test("winnowingSharedSpans cached (default) and uncached spellings are " +
       "identical — the extent-frame persist is an execution detail, " +
       "never a semantic input (r15 verdict item 1)") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def inMemory(f: org.apache.spark.sql.DataFrame) =
+      f.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r }.isDefined
+    def rows(f: org.apache.spark.sql.DataFrame) = f.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
+      .toSet
     val vocab = Vector("a", "b", "c")
     for (seed <- 9890 until 9894) {
       val rnd = new Random(seed)
@@ -2156,49 +2164,57 @@ class RandomizedParitySpec extends SparkTestBase {
       val docRows = (0L until (5 + rnd.nextInt(6)).toLong)
         .map(i => (i, randDoc(rnd, vocab, 3 + rnd.nextInt(10))))
       val df = docRows.toDF("doc_id", "text")
-      def run(cache: Boolean) = graft.operators.TextOps
-        .winnowingSharedSpans(df, "text", "doc_id", k, w, maxDf, cache)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
-        .toSet
-      assert(run(cache = true) === run(cache = false),
+      def build() = graft.operators.TextOps
+        .winnowingSharedSpans(df, "text", "doc_id", k, w, maxDf)
+      // the lazy side: the registered frame is released before the first
+      // action, so this plan recomputes the extents on every consumer
+      val lazySpans = build()
+      OpCaches.clear()
+      assert(!inMemory(lazySpans), s"\nseed=$seed")
+      val uncached = rows(lazySpans)
+      val cachedSpans = build()
+      assert(inMemory(cachedSpans), s"\nseed=$seed")
+      assert(rows(cachedSpans) === uncached,
         s"\nseed=$seed k=$k w=$w maxDf=$maxDf")
     }
   }
 
   test("winnowingSharedSpans' frame registry: interleaved corpora each " +
       "keep their cached frame (the r16 single slot thrashed them), " +
-      "repeats re-find it, and the pin count stays bounded at 2 with LRU " +
-      "eviction (r16 verdict residual 4)") {
+      "repeats re-find it, and the pin count stays bounded at " +
+      "OpCaches.MaxFrames with LRU eviction (r16 verdict residual 4)") {
     val rnd = new Random(9911)
     val vocab = Vector("a", "b", "c")
     def corpus(n: Long) = (0L until n)
       .map(i => (i, randDoc(rnd, vocab, 4 + rnd.nextInt(8))))
       .toDF("doc_id", "text")
-    val (dfA, dfB, dfC) = (corpus(6), corpus(7), corpus(8))
     def run(df: org.apache.spark.sql.DataFrame) = graft.operators.TextOps
       .winnowingSharedSpans(df, "text", "doc_id", 2, 2, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
       .toSet
+    OpCaches.clear()
+    val (dfA, dfB) = (corpus(6), corpus(7))
     val (a1, b1) = (run(dfA), run(dfB)) // cold: two registrations
-    val h0 = graft.operators.TextOps.spanCacheHits.get()
+    val h0 = OpCaches.hits.get()
     val (a2, b2) = (run(dfA), run(dfB)) // interleaved repeats: both HIT
-    assert(graft.operators.TextOps.spanCacheHits.get() - h0 === 2L,
+    assert(OpCaches.hits.get() - h0 === 2L,
       "each interleaved corpus must re-find its own persisted frame")
     assert(a1 === a2); assert(b1 === b2)
-    assert(graft.operators.TextOps.cachedSpanFrameCount <= 2)
-    // third corpus: the registry evicts the least-recently-used frame
-    // (A — access order after the repeats is A then B) and stays bounded
-    run(dfC)
-    assert(graft.operators.TextOps.cachedSpanFrameCount <= 2,
-      "registry must stay bounded at MaxCachedSpanFrames")
+    assert(OpCaches.frameCount === 2)
+    // MaxFrames - 1 more corpora make MaxFrames + 1 registrations: the
+    // registry evicts the least-recently-used frame (A — access order
+    // after the repeats is A then B) and stays at its bound
+    (1 until OpCaches.MaxFrames).foreach(i => run(corpus(7L + i)))
+    assert(OpCaches.frameCount === OpCaches.MaxFrames,
+      "registry must stay bounded at OpCaches.MaxFrames")
     // the evicted corpus still computes correctly (lazy recompute) and
     // re-registers as a miss, not a hit
-    val h1 = graft.operators.TextOps.spanCacheHits.get()
+    val h1 = OpCaches.hits.get()
     assert(run(dfA) === a1)
-    assert(graft.operators.TextOps.spanCacheHits.get() === h1,
+    assert(OpCaches.hits.get() === h1,
       "an evicted frame must re-register (miss), not phantom-hit")
+    OpCaches.clear()
   }
 
   test("winnowingSharedSpans' frame registry purges entries whose session " +
@@ -2215,20 +2231,20 @@ class RandomizedParitySpec extends SparkTestBase {
       .winnowingSharedSpans(df, "text", "doc_id", 2, 2, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val first = run() // registers a frame for the suite session
-    assert(graft.operators.TextOps.cachedSpanFrameCount >= 1)
+    assert(OpCaches.frameCount >= 1)
     // every-session-dead: the purge must empty the registry entirely
-    graft.operators.TextOps.purgeStoppedSessions(_ => true)
-    assert(graft.operators.TextOps.cachedSpanFrameCount === 0,
+    OpCaches.purgeStoppedSessions(_ => true)
+    assert(OpCaches.frameCount === 0,
       "a stopped session's frame must be unregistered at purge")
     // the live session recomputes correctly (unpersist was best-effort,
     // the plan is lazy) and re-registers as a cold miss, not a hit
-    val h0 = graft.operators.TextOps.spanCacheHits.get()
+    val h0 = OpCaches.hits.get()
     assert(run() === first)
-    assert(graft.operators.TextOps.spanCacheHits.get() === h0,
+    assert(OpCaches.hits.get() === h0,
       "a purged frame must re-register (miss), not phantom-hit")
     // real predicate over the live suite session: purge keeps the entry
-    graft.operators.TextOps.purgeStoppedSessions()
-    assert(graft.operators.TextOps.cachedSpanFrameCount >= 1,
+    OpCaches.purgeStoppedSessions()
+    assert(OpCaches.frameCount >= 1,
       "a live session's frame must survive the real-predicate purge")
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.unsafe.array.ByteArrayMethods;
 import org.apache.spark.unsafe.types.UTF8String;
 
 /**
- * Row-level string kernels backing the custom Catalyst Expressions.
+ * Row-level string kernels behind graft's string functions.
  *
  * Static Java methods so whole-stage-codegen'd Java can call them directly
  * (graft.expressions.StringKernels.xxx(...)). Each implements the semantics

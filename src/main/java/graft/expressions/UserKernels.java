@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String;
  * numba-compiles it against raw Arrow buffers
  * (reference fletcher/algorithms/string.py:1046-1119, jitclass harness
  * string_array.py:48-171); here, the same function body becomes a static
- * Java method over zero-copy {@link UTF8String} and a two-line Catalyst
- * Expression ({@code graft.functions.PrefixLength}) splices a call to it
- * into the generated row loop. Both engines end at the same place: the
+ * Java method over zero-copy {@link UTF8String}, and one Spark
+ * {@code StaticInvoke} ({@code graft.functions.UdfSurface.prefixLength})
+ * splices a call to it into the generated row loop. Both engines end at the same place: the
  * user's scalar logic inlined into compiled columnar code, with null
  * handling supplied by the harness, not the kernel.
  *

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData;
 import org.apache.spark.sql.catalyst.util.GenericArrayData;
 
 /**
- * Tight-loop kernels behind {@link VectorDot} / {@link VectorL2Sq} /
- * {@link PqEncode} — the r19 optimization round's replacement for the
+ * Tight-loop kernels behind {@link VectorDot}, {@link PqEncode},
+ * {@code Pq.l2sq} and the dedup/winnowing operators — the r19 optimization round's replacement for the
  * higher-order-function spellings of the similarity hot paths.
  *
  * WHY: Spark's higher-order functions (transform/aggregate/zip_with) are

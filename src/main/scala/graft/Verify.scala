@@ -75,15 +75,19 @@ object Verify {
     // this scale (stale or missing); check_oracle is invoked with explicit
     // gate names under a filter, so the narrower json is sufficient.
     val sfName = new java.io.File(sfDir).getName
-    def atThisScale(sql: String): String =
-      sql.replaceAll(
-        """(/root/repo/target/oracle_aux/[A-Za-z0-9_]+_)sf0\.01(/\*\.parquet)""",
-        "$1" + java.util.regex.Matcher.quoteReplacement(sfName) + "$2")
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => filter.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(atThisScale(v))}" }
+      .map { case (k, v) => s"${q(k)}: ${q(atScale(v, sfName))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** `sql` with every side-table path pinned to sf0.01 rewritten to the
+    * scale `sfName` (see the comment in [[main]]). */
+  private[graft] def atScale(sql: String, sfName: String): String =
+    sql.replaceAll(
+      "(" + java.util.regex.Pattern.quote(queries.OracleAuxDir) +
+        """[A-Za-z0-9_]+_)sf0\.01(/\*\.parquet)""",
+      "$1" + java.util.regex.Matcher.quoteReplacement(sfName) + "$2")
 }

@@ -2,20 +2,16 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Codegen'd vector kernels for the similarity/ANN hot paths (r19
-  * optimization round). Each is a drop-in replacement for a higher-order-
-  * function fold whose per-element interpreted evaluation dominated the
-  * operator's CPU (HOFs are CodegenFallback); the arithmetic is the
-  * bit-identical sequential fold — see [[VectorKernels]] for the contract.
-  * Same discipline as [[TextCount]] et al.: every expression ships
-  * `doGenCode` as one static call into a kernel class so it stays inside
-  * whole-stage codegen.
-  */
-
-/** Sequential-fold dot product of two array&lt;double&gt; columns. */
+/** Sequential-fold dot product of two array&lt;double&gt; columns, null
+  * when their lengths differ or an element is null. A class rather than a
+  * `StaticInvoke`: besides its codegen'd uses it runs interpreted once per
+  * corpus row and centroid or plane inside `aggregate`/`transform` lambdas
+  * (Similarity.cellFor, cellsFor, lshBucket), where the reflective call
+  * measured +7% on an 8-plane lshBucket fold over 200k 64-dim rows. */
 case class VectorDot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[DataType] =
@@ -35,100 +31,15 @@ case class VectorDot(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** Sequential-fold squared L2 distance of two array&lt;double&gt; columns. */
-case class VectorL2Sq(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.l2sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("l2Res")
-      s"""java.lang.Double $r = graft.expressions.VectorKernels.l2sq($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.doubleValue(); }""".stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
 /** All k-gram hashes (in order, with multiplicity) from a token-hash
-  * array — the shingleHashesAll fold as one kernel call per row instead
-  * of k·(n−k+1) interpreted lambda steps. */
-case class ShingleGrams(child: Expression, k: Int, mod: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullSafeEval(th: Any): Any =
-    VectorKernels.shingleGrams(th.asInstanceOf[ArrayData], k, mod)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, th =>
-      s"graft.expressions.VectorKernels.shingleGrams($th, $k, ${mod}L)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** Winnowing per-window (fp, pos) selections over a gram-hash array —
-  * the per-window rightmost-min fold as one kernel call per row. */
-case class WinnowSelect(child: Expression, w: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("fp", LongType, nullable = false),
-      StructField("pos", LongType, nullable = false))),
-    containsNull = false)
-  override def nullSafeEval(g: Any): Any =
-    VectorKernels.winnowSelect(g.asInstanceOf[ArrayData], w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, g =>
-      s"graft.expressions.VectorKernels.winnowSelect($g, $w)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** 30-bit SimHash of a long-hash array. NON-nullable by contract: the
-  * expression it replaces summed 30 when()-terms that each fall to
-  * otherwise(0) on a null array, so a null input yields 0, never null —
-  * hence the custom eval/doGenCode instead of nullSafeEval. */
-case class SimHash30Expr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    VectorKernels.simHash30(child.eval(input).asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    ev.copy(
-      code = code"""
-        ${c.code}
-        long ${ev.value} = graft.expressions.VectorKernels.simHash30(
-          ${c.isNull} ? null : ${c.value});""",
-      isNull = FalseLiteral)
-  }
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** Exact Jaccard similarity of two array&lt;long&gt; hash-set columns —
-  * the dedup verify kernel. Replaces a HOF-wrapped array_intersect (the
-  * single-element-transform binding idiom made the WHOLE verify subtree
-  * interpreted); semantics mirrored exactly, see VectorKernels. */
-case class JaccardSim(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.jaccardLong(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.VectorKernels.jaccardLong($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
+  * array — the shingleHashesAll fold as one [[VectorKernels.shingleGrams]]
+  * call per row instead of k·(n−k+1) interpreted lambda steps. A builder,
+  * not a class (see the package scaladoc). */
+object ShingleGrams {
+  def apply(child: Expression, k: Int, mod: Long): Expression =
+    StaticInvoke(classOf[VectorKernels], ArrayType(LongType, containsNull = true),
+      "shingleGrams", Seq(child, Literal(k), Literal(mod)),
+      Seq(ArrayType(LongType), IntegerType, LongType), returnNullable = false)
 }
 
 /** PQ codes of an array&lt;double&gt; vector against driver-held codebooks

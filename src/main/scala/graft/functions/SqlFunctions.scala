@@ -5,11 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.expressions._
 
-/** SQL-surface registration: every custom Catalyst Expression becomes a
-  * `graft_*` SQL function in the session's registry, so the full engine is
-  * reachable from `spark.sql(...)` text (and thus from any SQL-speaking
-  * client), not only the Column DSL. Call [[register]] once per session —
-  * the same builders could be wired into
+/** SQL-surface registration: every string kernel becomes a `graft_*` SQL
+  * function in the session's registry, built by the same
+  * [[graft.expressions.StringCalls]] builder as its Column-API spelling, so
+  * the full engine is reachable from `spark.sql(...)` text (and thus from
+  * any SQL-speaking client), not only the Column DSL. Call [[register]]
+  * once per session — the same builders could be wired into
   * `SparkSessionExtensions.injectFunction` for cluster-wide deployment via
   * `spark.sql.extensions`.
   */
@@ -28,25 +29,25 @@ object SqlFunctions {
   }
 
   private val builders: Map[String, Seq[Expression] => Expression] = Map(
-    "graft_count" -> { case Seq(s, p) => TextCount(s, p) },
+    "graft_count" -> { case Seq(s, p) => StringCalls.count(s, p) },
     "graft_replace_n" ->
-      { case Seq(s, p, r, n) => TextReplaceN(s, p, r, int(n)) },
+      { case Seq(s, p, r, n) => StringCalls.replaceN(s, p, r, int(n)) },
     "graft_slice" ->
-      { case Seq(s, a, b, st) => TextSlice(s, int(a), int(b), int(st)) },
+      { case Seq(s, a, b, st) => StringCalls.slice(s, int(a), int(b), int(st)) },
     "graft_slice_replace" ->
-      { case Seq(s, r, a, b) => TextSliceReplace(s, r, int(a), int(b)) },
-    "graft_rfind" -> { case Seq(s, p) => TextRFind(s, p) },
+      { case Seq(s, r, a, b) => StringCalls.sliceReplace(s, r, int(a), int(b)) },
+    "graft_rfind" -> { case Seq(s, p) => StringCalls.rfind(s, p) },
     "graft_partition" ->
-      { case Seq(s, sep, i) => TextPartitionPart(s, sep, int(i), false) },
+      { case Seq(s, sep, i) => StringCalls.partitionPart(s, sep, int(i), false) },
     "graft_rpartition" ->
-      { case Seq(s, sep, i) => TextPartitionPart(s, sep, int(i), true) },
-    "graft_rsplit" -> { case Seq(s, sep, n) => TextRSplit(s, sep, int(n)) },
-    "graft_is" -> { case Seq(s, kind) => Utf8Is(s, str(kind)) },
-    "graft_casefold" -> { case Seq(s) => CaseFold(s) },
-    "graft_normalize" -> { case Seq(s, f) => NormalizeText(s, str(f)) },
-    "graft_zfill" -> { case Seq(s, w) => Zfill(s, int(w)) },
-    "graft_wrap" -> { case Seq(s, w) => WrapText(s, int(w)) },
-    "graft_swapcase" -> { case Seq(s) => SwapCase(s) },
+      { case Seq(s, sep, i) => StringCalls.partitionPart(s, sep, int(i), true) },
+    "graft_rsplit" -> { case Seq(s, sep, n) => StringCalls.rsplit(s, sep, int(n)) },
+    "graft_is" -> { case Seq(s, kind) => StringCalls.is(s, str(kind)) },
+    "graft_casefold" -> { case Seq(s) => StringCalls.caseFold(s) },
+    "graft_normalize" -> { case Seq(s, f) => StringCalls.normalize(s, str(f)) },
+    "graft_zfill" -> { case Seq(s, w) => StringCalls.zfill(s, int(w)) },
+    "graft_wrap" -> { case Seq(s, w) => StringCalls.wrap(s, int(w)) },
+    "graft_swapcase" -> { case Seq(s) => StringCalls.swapCase(s) },
     "graft_polyhash" -> { case Seq(s) => PolyHash(s) },
     // Bloom membership surface (Spark's internal runtime-filter aggregate,
     // exposed as a first-class SQL pair — see Dedup.ngramContaminationBloom

@@ -2,10 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.unsafe.types.UTF8String
-import graft.expressions.{toCol, toExpr}
+import graft.expressions.{toCol, toExpr, UserKernels}
 
 /** User-extension surface: apply an element-wise binary function over two
   * string columns (the Spark-native spelling of the reference's
@@ -25,10 +26,12 @@ import graft.expressions.{toCol, toExpr}
   * executes correctly inside any plan but breaks the whole-stage-codegen
   * span it appears in. That is the same per-row-call shape as a Scala UDF,
   * minus the UTF8String→String→UTF8String conversions. For hot paths,
-  * promote the lambda to a static Java kernel + a tiny Expression with
-  * `doGenCode` — the worked examples are [[graft.expressions.TextCount]]
-  * (simplest), [[graft.expressions.TextRFind]] and the rest of
-  * graft.expressions backed by [[graft.expressions.StringKernels]].
+  * promote the lambda to a static Java kernel plus one Spark
+  * `StaticInvoke`: codegen splices the kernel in as one static call, and
+  * there is no Expression class to write (the `graft.expressions` package
+  * scaladoc gives the contract). [[prefixLength]] is the worked example;
+  * the string kernels behind [[graft.expressions.StringCalls]] are the
+  * rest.
   */
 object UdfSurface {
 
@@ -57,33 +60,16 @@ object UdfSurface {
   /** The PROMOTED spelling of the same kernel — the worked example of this
     * surface's performance contract. The lambda body moved verbatim into
     * [[graft.expressions.UserKernels.prefixLength]] (static Java, zero-copy
-    * over Tungsten bytes) and this two-line Expression splices the call into
+    * over Tungsten bytes), and one `StaticInvoke` splices the call into
     * whole-stage codegen, exactly as the reference promotes a plain-Python
-    * kernel to a numba-jitted one (string.py:1046-1119). `UdfSurfaceSpec`
+    * kernel to a numba-jitted one (string.py:1046-1119). Null handling is
+    * the lambda's: a null input gives null without a call. `UdfSurfaceSpec`
     * pins both paths equal on a null-bearing corpus; the plan test there
     * pins this one INSIDE a WholeStageCodegen span and the lambda outside.
     */
   def prefixLength(a: Column, b: Column): Column =
-    toCol(PrefixLength(toExpr(a), toExpr(b)))
-}
-
-/** Codegen form of [[UdfSurface.prefixLengthLambda]]: same null contract
-  * (BinaryExpression null-propagation = the reference's validity-bitmap
-  * AND), same kernel body, but `doGenCode` emits a static call so the row
-  * loop stays compiled. This pair is the template for promoting any hot
-  * user kernel off the lambda surface.
-  */
-case class PrefixLength(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.expressions.UserKernels.prefixLength(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.expressions.UserKernels.prefixLength($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
+    toCol(StaticInvoke(classOf[UserKernels], IntegerType, "prefixLength",
+      Seq(toExpr(a), toExpr(b)), returnNullable = false))
 }
 
 /** Eval-mode expression carrying the user's element-wise function. Null

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
+import graft.expressions.{toCol, toExpr, VectorKernels}
 
 /** Product-quantization ANN (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search"): split the embedding into `m` subspaces, learn
@@ -39,8 +42,8 @@ object Pq {
     * Codegen'd kernel spelling — same rationale and bit-exactness contract
     * as [[Similarity.dot]] (the HOF fold it replaces is interpreted). */
   def l2sq(a: Column, b: Column): Column =
-    graft.expressions.toCol(graft.expressions.VectorL2Sq(
-      graft.expressions.toExpr(a), graft.expressions.toExpr(b)))
+    toCol(StaticInvoke(classOf[VectorKernels], DoubleType, "l2sq",
+      Seq(toExpr(a), toExpr(b)), Seq(ArrayType(DoubleType), ArrayType(DoubleType))))
 
   /** Codebooks as one literal: array[m][k][subDim] of double. Guarded by
     * the same plan-side budget as the IVF centroid literal. */

@@ -284,7 +284,7 @@ object Quality {
     * boilerplate far lower; random gibberish ≈ 1 — the cheap two-sided
     * filter (too compressible = spam/boilerplate, incompressible =
     * noise/binary-in-text) used by Dolma/RedPajama-style curation.
-    * A native codegen Expression ([[graft.expressions.DeflateLen]], zlib
+    * One static kernel call ([[graft.expressions.StringKernels.deflateLen]], zlib
     * thread-local-reused) — pure narrow projection, no shuffle. The raw
     * size is UTF-8 BYTES (not codepoints): same units the compressor sees.
     *

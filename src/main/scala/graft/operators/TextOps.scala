@@ -2,6 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types._
+import graft.expressions.{toCol, toExpr, ShingleGrams, VectorKernels}
 import graft.expressions.TextExpressions.polyHash
 
 /** Shared primitives for the LLM-training-data pipeline operators (dedup,
@@ -59,8 +63,7 @@ object TextOps {
     // CodegenFallback). ShingleGrams runs the identical (h·31+tok) % P
     // left fold in one kernel call per row; the per-token polyHash
     // transform stays (already one kernel call per token).
-    graft.expressions.toCol(graft.expressions.ShingleGrams(
-      graft.expressions.toExpr(transform(tokens(text), t => polyHash(t))),
+    toCol(ShingleGrams(toExpr(transform(tokens(text), t => polyHash(t))),
       k, PolyMod))
 
   /** Distinct k-shingle hash set — the dedup signature. */
@@ -95,7 +98,7 @@ object TextOps {
     val withG = docs
       .filter(size(tokens(col(textCol))) >= k)
       .select(col(idCol).as("doc_id"), grams.as("__g"))
-    // Per-window rightmost-min via the codegen'd WinnowSelect kernel: one
+    // Per-window rightmost-min via the VectorKernels.winnowSelect kernel: one
     // call per row emitting the (fp, pos) selection of every window —
     // x <= best takes the later occurrence on ties, which is exactly
     // array_min + rightmost array_position, with zero per-window array
@@ -103,13 +106,20 @@ object TextOps {
     // a slice AND its reverse per window and scanned them three times;
     // that was the whole CPU cost of the spans gate, guide §1.2
     // "per-task work").
-    val sel = graft.expressions.toCol(graft.expressions.WinnowSelect(
-      graft.expressions.toExpr(col("__g")), w))
     withG
-      .select(col("doc_id"), explode(sel).as("__s"))
+      .select(col("doc_id"), explode(winnowSelect(col("__g"), w)).as("__s"))
       .select(col("doc_id"), col("__s.pos").as("pos"), col("__s.fp").as("fp"))
       .distinct()
   }
+
+  /** The (fp, pos) selection of every window of `w` gram hashes, as
+    * [[winnowingFingerprints]] explodes it. */
+  private[graft] def winnowSelect(grams: Column, w: Int): Column =
+    toCol(StaticInvoke(classOf[VectorKernels],
+      ArrayType(StructType(Seq(StructField("fp", LongType, nullable = false),
+        StructField("pos", LongType, nullable = false))), containsNull = false),
+      "winnowSelect", Seq(toExpr(grams), Literal(w)),
+      Seq(ArrayType(LongType), IntegerType), returnNullable = false))
 
   /** Cross-document matched-span extents from winnowing fingerprints —
     * the signal [[winnowingFingerprints]] exists to feed: an fp-EQUALITY
@@ -194,20 +204,23 @@ object TextOps {
     // Codegen'd kernel (r19): the old single-element-transform binding of
     // |∩| made the whole verify subtree interpreted (transform is
     // CodegenFallback) — at 548k candidate pairs per jaccard gate that
-    // WAS the verify cost. JaccardSim mirrors the expression exactly:
-    // array_intersect distinct-count, raw sizes in the denominator,
+    // WAS the verify cost. VectorKernels.jaccardLong mirrors the expression
+    // exactly: array_intersect distinct-count, raw sizes in the denominator,
     // empty-vs-empty → 1.0 before any division (the ANSI divide guard).
-    graft.expressions.toCol(graft.expressions.JaccardSim(
-      graft.expressions.toExpr(a), graft.expressions.toExpr(b)))
+    toCol(StaticInvoke(classOf[VectorKernels], DoubleType, "jaccardLong",
+      Seq(toExpr(a), toExpr(b)), Seq(ArrayType(LongType), ArrayType(LongType)),
+      returnNullable = false))
 
   /** 30-bit SimHash over the distinct token-hash set: bit b is set when
     * Σ_tokens (±1 by hash bit b) > 0. Codegen'd kernel (r19): the old
-    * spelling ran 30 interpreted aggregate folds per row; SimHash30Expr
+    * spelling ran 30 interpreted aggregate folds per row; the kernel
     * mirrors it exactly including the null corners (null element votes
-    * −1, null array yields 0 — the expression was non-nullable). */
+    * −1, null array yields 0 — the expression was non-nullable), so the
+    * null array reaches the kernel and the column is non-nullable. */
   def simHash30(hashes: Column): Column =
-    graft.expressions.toCol(graft.expressions.SimHash30Expr(
-      graft.expressions.toExpr(hashes)))
+    toCol(StaticInvoke(classOf[VectorKernels], LongType, "simHash30",
+      Seq(toExpr(hashes)), Seq(ArrayType(LongType)), propagateNull = false,
+      returnNullable = false))
 
   // ---- language-ID stopword marker sets (tiny n-gram-free heuristic;
   // deterministic and SQL-expressible). Tie-break order: en,de,es,fr,zh. ----

@@ -31,7 +31,7 @@ object Corpus {
     * and both engines derive ratio + keep from the same table. Declared
     * BEFORE [[defs]] — the oracle string interpolates it eagerly at object
     * init, and vals initialize in declaration order. */
-  private val DeflateDumpBase = "/root/repo/target/oracle_aux/deflate_len_"
+  private val DeflateDumpBase = OracleAuxDir + "deflate_len_"
   private def deflateDump(dir: String): String =
     DeflateDumpBase + new java.io.File(dir).getName
 

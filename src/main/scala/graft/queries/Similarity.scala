@@ -78,9 +78,9 @@ object Similarity {
     * as [[CentroidDumpBase]]): the coarse centroids and the residual
     * codebooks the plan scored with. */
   private val IvfPqCentDumpBase =
-    "/root/repo/target/oracle_aux/ivfpq_centroids_"
+    OracleAuxDir + "ivfpq_centroids_"
   private val IvfPqCbDumpBase =
-    "/root/repo/target/oracle_aux/ivfpq_codebooks_"
+    OracleAuxDir + "ivfpq_codebooks_"
 
   /** Side-table handing the LEARNED k-means|| centroids to the oracle: the
     * query fn dumps the exact centroid set its plan scores with, and the
@@ -98,14 +98,14 @@ object Similarity {
     * scale when dumping oracle_sql.json, so the oracle reads the matching
     * aux table at ANY sf (identity at sf0.01). */
   private val CentroidDumpBase =
-    "/root/repo/target/oracle_aux/ivf_centroids_learned_"
+    OracleAuxDir + "ivf_centroids_learned_"
   private def centroidDump(dir: String): String =
     CentroidDumpBase + new java.io.File(dir).getName
 
   /** Side-table handing the PQ codebooks to the oracle (same contract and
     * same-scale-concurrency story as [[CentroidDumpBase]]): (sub, cid, cv)
     * rows, cid 0-based within each subspace. */
-  private val PqDumpBase = "/root/repo/target/oracle_aux/pq_codebooks_"
+  private val PqDumpBase = OracleAuxDir + "pq_codebooks_"
   private def pqDump(dir: String): String =
     PqDumpBase + new java.io.File(dir).getName
 
@@ -137,7 +137,7 @@ object Similarity {
   private val PqProdK = 32
   private val PqProdSubDim = Dim / PqProdM
   private val PqProdDumpBase =
-    "/root/repo/target/oracle_aux/pq_codebooks_prod_"
+    OracleAuxDir + "pq_codebooks_prod_"
   private def pqProdDump(dir: String): String =
     PqProdDumpBase + new java.io.File(dir).getName
   private def pqProdRerankFor(n: Long): Int =
@@ -182,7 +182,7 @@ object Similarity {
   /** Side-table handing the SemDeDup centroids to the oracle (same
     * contract as [[CentroidDumpBase]]; separate path because the learned-
     * IVF gate overwrites that one with its own training params). */
-  private val SemDumpBase = "/root/repo/target/oracle_aux/semdedup_centroids_"
+  private val SemDumpBase = OracleAuxDir + "semdedup_centroids_"
   private def semDump(dir: String): String =
     SemDumpBase + new java.io.File(dir).getName
   private val SemThreshold = 0.3
@@ -191,7 +191,7 @@ object Similarity {
     * corpus count there, so the centroid set differs per scale and needs
     * its own dump path. */
   private val SemAutoDumpBase =
-    "/root/repo/target/oracle_aux/semdedup_auto_centroids_"
+    OracleAuxDir + "semdedup_auto_centroids_"
   private def semAutoDump(dir: String): String =
     SemAutoDumpBase + new java.io.File(dir).getName
 
@@ -200,7 +200,7 @@ object Similarity {
     * on the centroid dump): the oracle ranks these by (cos DESC, gid) per
     * row and argmaxes over the top-[[Sim.GroupProbes]] groups' members. */
   private val SemAutoGroupsBase =
-    "/root/repo/target/oracle_aux/semdedup_auto_groups_"
+    OracleAuxDir + "semdedup_auto_groups_"
   private def semAutoGroupsDump(dir: String): String =
     SemAutoGroupsBase + new java.io.File(dir).getName
   /** Auto-k cell-size target for the gate: small enough that the derived
@@ -395,7 +395,7 @@ object Similarity {
     * min(16, |cents|) — mirrored in SQL as least(16, count(cent)). */
   private val K64Probe = 16
   private val K64DumpBase =
-    "/root/repo/target/oracle_aux/ivf_centroids_k64_"
+    OracleAuxDir + "ivf_centroids_k64_"
   private def k64Dump(dir: String): String =
     K64DumpBase + new java.io.File(dir).getName
 

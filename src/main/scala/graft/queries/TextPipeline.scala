@@ -79,7 +79,7 @@ object TextPipeline {
     * computation. Declared BEFORE [[defs]] — the oracle string
     * interpolates it eagerly at object init, and vals initialize in
     * declaration order. */
-  private val BloomDumpBase = "/root/repo/target/oracle_aux/bloom_survivors_"
+  private val BloomDumpBase = OracleAuxDir + "bloom_survivors_"
   private def bloomDump(dir: String): String =
     BloomDumpBase + new java.io.File(dir).getName
 

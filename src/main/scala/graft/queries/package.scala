@@ -27,6 +27,14 @@ package object queries {
     */
   @volatile private[graft] var tableLayout: DataFrame => DataFrame = identity
 
+  /** Directory of the side tables that the replay gates dump and their
+    * oracle SQL reads back: `target/oracle_aux` under the working
+    * directory, absolute, ending in `/`. sbt runs forked mains and tests in
+    * the checkout, so each checkout writes and reads its own side tables
+    * and two checkouts running at once never read each other's. */
+  val OracleAuxDir: String =
+    java.nio.file.Paths.get("target", "oracle_aux").toAbsolutePath.toString + "/"
+
   /** The canonical post-read dtype contract for the driver tables' time
     * columns. The data layer is free to regenerate the parquet with any
     * timestamp unit — the r11→r12 regeneration flipped `events.ts` from

@@ -474,7 +474,7 @@ object DumpPlans {
     }
     // explicit UTF-8: the default-charset constructor mangled the notes'
     // arrows/dashes to '?' under the JVM's POSIX locale
-    val w = new PrintWriter("/root/repo/PLANS.md", "UTF-8")
+    val w = new PrintWriter("PLANS.md", "UTF-8") // in the checkout sbt runs from
     try w.write(out.toString) finally w.close()
     println("wrote PLANS.md")
     spark.stop()

@@ -48,7 +48,7 @@ class UdfSurfaceSpec extends SparkTestBase {
     assert(vals(1).isNullAt(0))
   }
 
-  // ---- the worked promotion example: lambda → static Java + doGenCode ----
+  // ---- the worked promotion example: lambda → static Java + StaticInvoke ----
 
   test("promoted PrefixLength == lambda spelling (multi-byte, nulls, empties)") {
     // byte-wise LCP: 'é' = C3 A9 vs 'è' = C3 A8 share ONE byte — pins that
@@ -85,7 +85,8 @@ class UdfSurfaceSpec extends SparkTestBase {
   test("promoted kernel joins the codegen span; the lambda breaks it") {
     import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.catalyst.expressions.Expression
-    import graft.functions.{BinaryStringApply, PrefixLength}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import graft.functions.BinaryStringApply
     // Type-based span membership (not toString matching, which breaks on any
     // prettyName / plan-rendering change): the expressions of the plan nodes
     // inside a WholeStageCodegenExec, stopping at InputAdapter (nodes below
@@ -104,7 +105,12 @@ class UdfSurfaceSpec extends SparkTestBase {
     val spans = promoted.queryExecution.executedPlan.collect {
       case w: WholeStageCodegenExec => w
     }
-    assert(spans.exists(spanExprs(_).exists(_.isInstanceOf[PrefixLength])),
+    def isPromoted(e: Expression): Boolean = e match {
+      case s: StaticInvoke => s.functionName == "prefixLength" &&
+        s.staticObject == classOf[graft.expressions.UserKernels]
+      case _ => false
+    }
+    assert(spans.exists(spanExprs(_).exists(isPromoted)),
       s"promoted kernel fell out of whole-stage codegen:\n" +
         promoted.queryExecution.executedPlan)
 

@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String;
  * BYTE CONTRACT: like the reference's loops over raw Arrow UTF-8 buffers,
  * the per-row kernels read the UTF-8 bytes. countLiteral, replaceN,
  * markerHits and pretokenCount are byte-level for every input; swapCase,
- * caseFold, sliceCodepoints, rfindLiteral, polyHash, normalize and the nine
+ * caseFold, sliceCodepoints, rfindLiteral, polyHash, tokenHashes, normalize and the nine
  * is* predicates take a byte path when every byte is ASCII
  * ({@link #isAscii}), so an ASCII row
  * never becomes a java.lang.String (one byte is one codepoint, and the
@@ -630,6 +630,31 @@ public final class StringKernels {
             i += Character.charCount(cp);
         }
         return h;
+    }
+
+    /**
+     * The polyHash of each token of {@code split(str, " ")}: the pieces
+     * between 0x20 bytes, empty ones included, so n spaces give n + 1
+     * hashes (tab, newline and NBSP do not split). A non-ASCII row splits
+     * its decoded String, as split does.
+     */
+    public static ArrayData tokenHashes(UTF8String str) {
+        if (!isAscii(str)) {
+            String[] toks = str.toString().split(" ", -1);
+            long[] out = new long[toks.length];
+            for (int i = 0; i < toks.length; i++) out[i] = polyHashCp(UTF8String.fromString(toks[i]));
+            return new org.apache.spark.sql.catalyst.util.GenericArrayData(out);
+        }
+        int n = str.numBytes(), t = 0;
+        for (int i = 0; i < n; i++) if (str.getByte(i) == ' ') t++;
+        long[] out = new long[t + 1];
+        t = 0;
+        for (int i = 0; i < n; i++) {
+            byte b = str.getByte(i);
+            if (b == ' ') t++;
+            else out[t] = (out[t] * 31 + b) % POLY_MOD;
+        }
+        return new org.apache.spark.sql.catalyst.util.GenericArrayData(out);
     }
 
     // ---- token and pre-token counting for the text-quality gates: one

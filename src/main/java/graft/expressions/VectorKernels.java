@@ -3,25 +3,26 @@ package graft.expressions;
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow;
 import org.apache.spark.sql.catalyst.util.ArrayData;
 import org.apache.spark.sql.catalyst.util.GenericArrayData;
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil;
 
 /**
- * Tight-loop kernels behind {@link VectorDot}, {@link PqEncode},
- * {@code Pq.l2sq} and the dedup/winnowing operators — the r19 optimization round's replacement for the
- * higher-order-function spellings of the similarity hot paths.
+ * Tight-loop kernels of the similarity, PQ and dedup operators, each one
+ * {@code StaticInvoke} ({@link VectorCalls}); a driver-held matrix travels
+ * as a {@link VectorSet}.
  *
  * WHY: Spark's higher-order functions (transform/aggregate/zip_with) are
  * CodegenFallback — every lambda step is an interpreted Catalyst eval with
- * boxing, so a 64-dim dot product costs ~200 interpreted node evaluations
- * per call, and PQ coding costs m·k of those folds PER ROW. These kernels
- * run the identical arithmetic as one static Java call that whole-stage
- * codegen can inline (the StringKernels pattern, SURVEY.md §7.5 risk 5).
+ * boxing, and the plan node drops out of whole-stage codegen — so a fold
+ * over elements, centroids or planes is one whole-array kernel here.
  *
  * BIT-EXACTNESS CONTRACT (the cross-engine determinism rules depend on it):
  * every loop accumulates in ascending index order from the same initial
  * value as the fold it replaces, so each result is the identical IEEE-754
  * value the aggregate(zip_with(...)) expression produced — including the
  * null semantics: zip_with pads a length mismatch with null and a null
- * element poisons the fold, hence the null returns below.
+ * element poisons the fold, hence the null returns below. Doubles compare
+ * as in Spark ({@link SQLOrderingUtil#compareDoubles}): NaN above all and
+ * equal to itself, -0.0 equal to 0.0.
  */
 public final class VectorKernels {
   private VectorKernels() {}
@@ -185,33 +186,147 @@ public final class VectorKernels {
    * carrying a null element, made every per-centroid distance null in the
    * fold (zip_with padding), so no centroid ever updated the accumulator —
    * mirrored here as "never update", leaving the fold's initial cid −1.
-   * NaN distances also never update (NaN &lt; best is false both ways). */
-  public static ArrayData pqEncode(ArrayData v, double[][][] cbs, int subDim) {
-    int m = cbs.length;
-    int[] codes = new int[m];
-    int vn = v.numElements();
-    for (int s = 0; s < m; s++) {
+   * NaN distances also never update (NaN &lt; best is false both ways),
+   * nor does a centroid whose length is not subDim. */
+  public static ArrayData pqEncode(ArrayData v, VectorSet cbs, int subDim) {
+    int[] codes = new int[cbs.ids().length];
+    for (int s = 0; s < codes.length; s++) {
+      double[][] cb = cbs.members()[s].vecs();
+      double[] d = (s + 1) * subDim <= v.numElements()
+          ? subDistances(v, cb, s * subDim, subDim) : null;
       double best = Double.POSITIVE_INFINITY;
-      int cid = -1;
-      int off = s * subDim;
-      if (off + subDim <= vn) {
-        boolean hasNull = false;
-        for (int j = 0; j < subDim && !hasNull; j++) hasNull = v.isNullAt(off + j);
-        if (!hasNull) {
-          double[][] cb = cbs[s];
-          for (int c = 0; c < cb.length; c++) {
-            double[] cv = cb[c];
-            double d = 0.0;
-            for (int j = 0; j < subDim; j++) {
-              double x = v.getDouble(off + j) - cv[j];
-              d += x * x;
-            }
-            if (d < best) { best = d; cid = c; }
-          }
-        }
-      }
-      codes[s] = cid;
+      codes[s] = -1;
+      for (int c = 0; d != null && c < cb.length; c++)
+        if (cb[c].length == subDim && d[c] < best) { best = d[c]; codes[s] = c; }
     }
     return new GenericArrayData(codes);
+  }
+
+  /** PQ distance table, Pq.qtabFor's nested transform: [s][c] = l2sq of
+   * slice(v, s·subDim + 1, subDim) and centroid c of codebook s; null where
+   * v is null or the slice (cut at the vector end) differs or holds a null. */
+  public static ArrayData adcTable(ArrayData v, VectorSet cbs, int subDim) {
+    int n = v == null ? 0 : v.numElements();
+    Object[] out = new Object[cbs.ids().length];
+    for (int s = 0; s < out.length; s++) {
+      double[][] cb = cbs.members()[s].vecs();
+      int off = s * subDim, len = off >= n ? 0 : Math.min(subDim, n - off);
+      double[] d = subDistances(v, cb, off, len);
+      Object[] row = new Object[cb.length];
+      for (int c = 0; d != null && c < cb.length; c++) if (cb[c].length == len) row[c] = d[c];
+      out[s] = new GenericArrayData(row);
+    }
+    return new GenericArrayData(out);
+  }
+
+  /** Sequential-fold l2sq of v's slice [off, off + len) against each
+   * centroid of length len (others stay 0.0), or null when v is null or
+   * the slice holds a null. */
+  private static double[] subDistances(ArrayData v, double[][] cb, int off, int len) {
+    if (v == null) return null;
+    for (int j = 0; j < len; j++) if (v.isNullAt(off + j)) return null;
+    double[] d = new double[cb.length];
+    for (int c = 0; c < cb.length; c++) {
+      for (int j = 0; cb[c].length == len && j < len; j++) {
+        double x = v.getDouble(off + j) - cb[c][j];
+        d[c] += x * x;
+      }
+    }
+    return d;
+  }
+
+  /** v's elements, or null when v or an element is null (so is every dot). */
+  private static double[] values(ArrayData v) {
+    if (v == null) return null;
+    for (int i = 0; i < v.numElements(); i++) if (v.isNullAt(i)) return null;
+    return v.toDoubleArray();
+  }
+
+  /** Sequential-fold dot product over c's length. */
+  public static double dotOf(double[] x, double[] c) {
+    double s = 0.0;
+    for (int j = 0; j < c.length; j++) s += x[j] * c[j];
+    return s;
+  }
+
+  /** LSH bucket, Similarity.lshBucket's plane fold: bit p iff dot(v, plane
+   * p) &gt; 0 (a NaN dot sets it, a null dot does not); null v gives 0. */
+  public static long lshBits(ArrayData v, VectorSet planes) {
+    double[] x = values(v);
+    long bits = 0L;
+    for (int p = 0; x != null && p < planes.ids().length; p++) {
+      double[] w = planes.vecs()[p];
+      if (w.length == x.length && SQLOrderingUtil.compareDoubles(dotOf(x, w), 0.0) > 0)
+        bits += 1L << p;
+    }
+    return bits;
+  }
+
+  /** Similarity.cosine of (x, nrm) against each vector of s: 0.0 for a null
+   * nrm or a norm product not &gt; 0 (NaN is &gt; 0 and divides), null (in
+   * nul) for a null dot. */
+  private static void cosines(double[] x, double nrm, boolean nrmNull, VectorSet s,
+      double[] cos, boolean[] nul) {
+    for (int i = 0; i < cos.length; i++) {
+      double prod = nrm * s.norms()[i];
+      boolean scored = !nrmNull && SQLOrderingUtil.compareDoubles(prod, 0.0) > 0;
+      nul[i] = scored && (x == null || x.length != s.vecs()[i].length);
+      cos[i] = scored && !nul[i] ? dotOf(x, s.vecs()[i]) / prod : 0.0;
+    }
+  }
+
+  /** Indices of the top p of s by (cosine desc, id asc), a null cosine
+   * after every non-null one; equal keys keep their order. */
+  private static int[] top(double[] x, double nrm, boolean nrmNull, VectorSet s, int p) {
+    int n = s.ids().length;
+    double[] cos = new double[n];
+    boolean[] nul = new boolean[n];
+    cosines(x, nrm, nrmNull, s, cos, nul);
+    Integer[] idx = new Integer[n];
+    for (int i = 0; i < n; i++) idx[i] = i;
+    java.util.Comparator<Integer> byCos = (i, j) -> nul[i] != nul[j]
+        ? Boolean.compare(nul[i], nul[j])
+        : nul[i] ? 0 : SQLOrderingUtil.compareDoubles(cos[j], cos[i]);
+    java.util.Arrays.sort(idx, byCos.thenComparingLong(i -> s.ids()[i]));
+    int[] top = new int[Math.max(0, Math.min(p, n))];
+    for (int i = 0; i < top.length; i++) top[i] = idx[i];
+    return top;
+  }
+
+  /** The nProbe probe list: ids of the top p centroids by (cosine desc, id
+   * asc). The replaced array_sort comparator had no rule for a null cosine
+   * (an inconsistent order); here it ranks last. */
+  public static ArrayData topCosine(ArrayData v, double nrm, boolean nrmNull,
+      VectorSet cents, int p) {
+    int[] top = top(values(v), nrm, nrmNull, cents, p);
+    long[] ids = new long[top.length];
+    for (int i = 0; i < top.length; i++) ids[i] = cents.ids()[top[i]];
+    return new GenericArrayData(ids);
+  }
+
+  /** Two-level argmax-cosine cell: over the members of the top nProbe
+   * groups ({@link #topCosine}'s rule), the largest cosine, then the
+   * smallest id, folded from (−Inf, −1) as Similarity's two-level
+   * aggregate was; a null cosine never wins. At nProbe ≥ the group count
+   * no center is scored, so one group at full probe is the flat argmax
+   * (whose strict &gt; differs only for a −Inf cosine at an id below −1). */
+  public static long argmaxCosine(ArrayData v, double nrm, boolean nrmNull,
+      VectorSet groups, int nProbe) {
+    double[] x = values(v);
+    int m = groups.ids().length;
+    int[] probed = nProbe < m ? top(x, nrm, nrmNull, groups, nProbe) : null;
+    double best = Double.NEGATIVE_INFINITY;
+    long cell = -1L;
+    for (int g = 0; g < (probed == null ? m : probed.length); g++) {
+      VectorSet mem = groups.members()[probed == null ? g : probed[g]];
+      double[] cos = new double[mem.ids().length];
+      boolean[] nul = new boolean[cos.length];
+      cosines(x, nrm, nrmNull, mem, cos, nul);
+      for (int i = 0; i < cos.length; i++) {
+        int c = nul[i] ? -1 : SQLOrderingUtil.compareDoubles(cos[i], best);
+        if (c > 0 || (c == 0 && mem.ids()[i] < cell)) { best = cos[i]; cell = mem.ids()[i]; }
+      }
+    }
+    return cell;
   }
 }

@@ -121,21 +121,14 @@ object StringCalls {
 
   /** Python str.swapcase (reference tests/test_text.py:773). */
   def swapCase(str: Expression): Expression = call("swapCase", StringType, str)
-}
 
-/** Deterministic polynomial rolling hash (document fingerprint / MinHash
-  * base hash): h = fold(h*31 + codepoint) mod 1e9+7. Cross-engine
-  * reproducible — see StringKernels.polyHash for the DuckDB equivalent.
-  * A class rather than a `StaticInvoke`: it runs interpreted once per
-  * token inside `transform` (TextOps.shingleHashesAll, the dedup token
-  * hashes), where the reflective call cost +17% per op. */
-case class PolyHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(str: Any): Any =
-    StringKernels.polyHash(str.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.expressions.StringKernels.polyHash($s)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  /** Polynomial rolling hash h = fold(h*31 + codepoint) mod 1e9+7, the
+    * cross-engine fingerprint and MinHash base hash (StringKernels.polyHash). */
+  def polyHash(str: Expression): Expression = call("polyHash", LongType, str)
+
+  /** The polyHash of every token of `split(str, " ")`, in order. */
+  def tokenHashes(str: Expression): Expression =
+    call("tokenHashes", ArrayType(LongType, containsNull = false), str)
 }
 
 /** One [[StringKernels.markerHits]] pass over a string array per row, the
@@ -280,7 +273,7 @@ object TextExpressions {
       start: Int = Int.MinValue, end: Int = Int.MinValue): Column =
     toCol(StringCalls.sliceReplace(toExpr(c), str(repl), start, end))
   def swapCase(c: Column): Column = toCol(StringCalls.swapCase(toExpr(c)))
-  def polyHash(c: Column): Column = toCol(PolyHash(toExpr(c)))
+  def polyHash(c: Column): Column = toCol(StringCalls.polyHash(toExpr(c)))
   def deflateLen(c: Column, level: Int = 6): Column =
     toCol(StringCalls.deflateLen(toExpr(c), level))
   // the three below read legacySizeOfNull when built, as Size does

@@ -11,27 +11,28 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *   - A scalar parameter travels as a `Literal` argument of the Java
   *     parameter's type (`Literal(n: Int)` for `int`): an interpreted plan
   *     finds the method by the arguments' classes.
+  *   - A driver-held object (a `Normalizer.Form`, a [[VectorSet]] of
+  *     planes, centroids or codebooks) travels as an `ObjectType` literal,
+  *     a reference object in generated code.
   *   - With `propagateNull` (the default) a null argument gives null
   *     without a call; `returnNullable = false` says the kernel itself
   *     never returns null.
   *   - `inputTypes`, when given, lists every argument's type; Spark casts
   *     an argument to it where it can.
+  *   - A kernel is never called from inside a higher-order-function lambda
+  *     (`transform`, `aggregate`, `array_sort`): those are CodegenFallback,
+  *     so the lambda would run interpreted and take its plan node out of
+  *     whole-stage codegen. A per-element fold is one whole-array kernel
+  *     instead (`KernelPlanGuardSpec` checks the operators' plans).
   * `KernelCallParitySpec` runs every such builder both ways.
   *
   * A custom Catalyst `Expression` under `src/main` stays only for a reason
   * `StaticInvoke` cannot carry (`ExpressionSurfaceSpec` holds the list):
-  *   - [[PolyHash]]: it runs interpreted per token inside `transform`
-  *     (`TextOps.shingleHashesAll`, the dedup token hashes), where the
-  *     reflective call measured +17% per op;
-  *   - [[VectorDot]]: it runs interpreted per row and centroid or plane
-  *     inside the IVF and LSH folds, where the reflective call measured
-  *     +7%;
   *   - [[MarkerHits]], [[LangPredict]]: a reference-object marker table and
   *     a per-task counts buffer;
   *   - [[PretokenCount]]: a null string gives what `size(null)` gives;
   *   - [[SplitBucket]]: reference-object split points under Catalyst
   *     ordering;
-  *   - [[PqEncode]]: reference-object codebooks with structural equality;
   *   - [[ProductAgg]]: an aggregate;
   *   - [[AboveWatermarkPredicate]]: streaming watermark semantics;
   *   - `graft.functions.BinaryStringApply`: the user-lambda surface itself.

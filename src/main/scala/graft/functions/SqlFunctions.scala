@@ -48,7 +48,7 @@ object SqlFunctions {
     "graft_zfill" -> { case Seq(s, w) => StringCalls.zfill(s, int(w)) },
     "graft_wrap" -> { case Seq(s, w) => StringCalls.wrap(s, int(w)) },
     "graft_swapcase" -> { case Seq(s) => StringCalls.swapCase(s) },
-    "graft_polyhash" -> { case Seq(s) => PolyHash(s) },
+    "graft_polyhash" -> { case Seq(s) => StringCalls.polyHash(s) },
     // Bloom membership surface (Spark's internal runtime-filter aggregate,
     // exposed as a first-class SQL pair — see Dedup.ngramContaminationBloom
     // for the operator-level use): build with

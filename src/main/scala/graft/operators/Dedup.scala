@@ -170,8 +170,7 @@ object Dedup {
     * plus the two 15-bit halves used for banded near-dup lookup. */
   def simhashFingerprints(docs: DataFrame, textCol: String,
       idCol: String): DataFrame = {
-    val h = array_distinct(transform(tokens(col(textCol)), t =>
-      graft.expressions.TextExpressions.polyHash(t)))
+    val h = array_distinct(tokenHashes(col(textCol)))
     docs.select(col(idCol).as("id"), h.as("h"))
       .withColumn("simhash", simHash30(col("h")))
       .withColumn("band_lo", col("simhash") % lit(1 << 15))
@@ -420,8 +419,7 @@ object Dedup {
     // re-hash the corpus (same pattern as minhashDupPairs)
     val withSets = OpCaches.cached(docs.select(col(idCol).as("id"),
         col(blockCol).as("block"),
-        array_distinct(transform(tokens(col(textCol)), t =>
-          graft.expressions.TextExpressions.polyHash(t))).as("h"))
+        array_distinct(tokenHashes(col(textCol))).as("h"))
       .withColumn("sz", size(col("h"))))
     // prefix length p = |h| − ⌈τ·|h|⌉ + 1 under the chosen total order;
     // the 1e-9 guard only ever LENGTHENS the prefix (safe direction for FP).
@@ -601,7 +599,7 @@ object Dedup {
     * per-document splitting leaves open (a test document's near-copy in
     * train is exactly what document-level dedup literature warns inflates
     * eval: Lee et al. 2022 §6.2). Ungrouped documents hash their own text.
-    * The decision is PolyHash(text) mod 100 against [0,trainPct),
+    * The decision is polyHash(text) mod 100 against [0,trainPct),
     * [trainPct,trainPct+valPct), rest — content-addressed, so it is
     * reproducible across engines, runs, and partitionings, and exact
     * duplicates agree even without a groups row.

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * codebook itself (plus the cell pruning).
   *
   * Plan shape: cell assignment and residual encoding are ONE narrow
-  * literal-fold projection over the corpus scan (no join, no shuffle);
+  * literal-kernel projection over the corpus scan (no join, no shuffle);
   * probe expansion and per-(query, cell) ADC tables live on the broadcast
   * query side; the candidate join is an equi-join on `cell`; only
   * (id, cell, codes) rows ever meet it. The exact re-rank fetches

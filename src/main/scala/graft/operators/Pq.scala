@@ -3,9 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.types.{ArrayType, DoubleType}
-import graft.expressions.{toCol, toExpr, VectorKernels}
+import graft.expressions.{toCol, toExpr, VectorCalls, VectorSet}
 
 /** Product-quantization ANN (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search"): split the embedding into `m` subspaces, learn
@@ -38,65 +36,42 @@ import graft.expressions.{toCol, toExpr, VectorKernels}
   */
 object Pq {
 
-  /** Sequential-fold squared L2 distance (mirrors DuckFrag.l2sqSql).
-    * Codegen'd kernel spelling — same rationale and bit-exactness contract
-    * as [[Similarity.dot]] (the HOF fold it replaces is interpreted). */
-  def l2sq(a: Column, b: Column): Column =
-    toCol(StaticInvoke(classOf[VectorKernels], DoubleType, "l2sq",
-      Seq(toExpr(a), toExpr(b)), Seq(ArrayType(DoubleType), ArrayType(DoubleType))))
+  /** Sequential-fold squared L2 distance (mirrors DuckFrag.l2sqSql). */
+  def l2sq(a: Column, b: Column): Column = toCol(VectorCalls.l2sq(toExpr(a), toExpr(b)))
 
-  /** Codebooks as one literal: array[m][k][subDim] of double. Guarded by
-    * the same plan-side budget as the IVF centroid literal. */
-  private def cbLit(cbs: Seq[Seq[Array[Double]]]): Column = {
+  /** The codebooks as one [[VectorSet]] (member set s = codebook s) and
+    * the sub-vector length. The set ships with every task, so it keeps the
+    * 2^22-double plan-side budget; PQ geometry (k·dim doubles) sits far
+    * below it. */
+  private def codebooks(cbs: Seq[Seq[Array[Double]]]): (VectorSet, Int) = {
     val doubles = cbs.iterator.flatMap(_.iterator.map(_.length.toLong)).sum
     require(doubles <= Similarity.LiteralDoubleLimit,
-      s"PQ codebooks too large for literal inlining ($doubles doubles > " +
-        "2^22) — PQ codebooks are m·k·(dim/m) = k·dim doubles by design; " +
-        "shrink k or train per-partition codebooks")
-    typedLit(cbs.map(_.map(_.toSeq)))
-      .cast("array<array<array<double>>>")
+      s"PQ codebooks too large for a plan-side literal ($doubles doubles > " +
+        "2^22) — they are k·dim doubles by design; shrink k or train " +
+        "per-partition codebooks")
+    def flat(vs: Seq[Array[Double]]): VectorSet = new VectorSet(
+      vs.indices.map(_.toLong).toArray, vs.map(_.clone()).toArray,
+      new Array[Double](vs.size), null)
+    (new VectorSet(cbs.indices.map(_.toLong).toArray,
+      Array.fill(cbs.size)(Array.emptyDoubleArray), new Array[Double](cbs.size),
+      cbs.map(flat).toArray), cbs.head.head.length)
   }
 
-  /** PQ codes for `v`: for each subspace s, the 0-based id of the nearest
-    * (squared-L2) centroid — strict `<` over ascending cid keeps the
-    * smallest id on ties. One narrow codegen'd kernel call per row
-    * ([[graft.expressions.PqEncode]]), no shuffle, no join. The r18
-    * spelling was a transform/aggregate fold over a codebook literal —
-    * m·k interpreted l2sq folds per row (HOFs are CodegenFallback), which
-    * the phase probe measured as the dominant cost of every PQ train and
-    * coding pass; the kernel runs the bit-identical arithmetic (see
-    * VectorKernels' contract). */
+  /** PQ codes for `v`: per subspace, the 0-based id of the nearest
+    * (squared-L2) centroid, ties to the smallest id — one
+    * [[graft.expressions.VectorKernels.pqEncode]] call per row. */
   def codesFor(v: Column, cbs: Seq[Seq[Array[Double]]]): Column = {
-    // Size guard, re-derived for the kernel transport (ADVICE r19: the
-    // old message still said "literal inlining"): the codebooks no longer
-    // ride the plan as a Literal — PqEncode holds them as a codegen
-    // REFERENCE OBJECT, so the binding constraints are driver heap per
-    // plan node, TASK-SERIALIZATION bytes (the reference object ships
-    // with every task binary), and executor memory per running task. The
-    // 2^22-double bound (32 MB) is kept as the budget for those — far
-    // above any real PQ geometry (m·k·(dim/m) = k·dim doubles), and small
-    // enough that task serialization stays off the critical path.
-    val doubles = cbs.iterator.flatMap(_.iterator.map(_.length.toLong)).sum
-    require(doubles <= Similarity.LiteralDoubleLimit,
-      s"PQ codebooks too large for the codegen reference object " +
-        s"($doubles doubles > 2^22 = 32 MB of task-serialized state) — " +
-        "PQ codebooks are m·k·(dim/m) = k·dim doubles by design; " +
-        "shrink k or train per-partition codebooks")
-    val subDim = cbs.head.head.length
-    graft.expressions.toCol(graft.expressions.PqEncode(
-      graft.expressions.toExpr(v),
-      cbs.map(_.map(_.clone()).toArray).toArray, subDim))
+    val (set, subDim) = codebooks(cbs)
+    toCol(VectorCalls.pqEncode(toExpr(v), set, subDim))
   }
 
   /** Per-query ADC table: array[m][k] of squared L2 distances from the
-    * query's subvectors to every subspace centroid. Computed once per
-    * query row (the broadcast side). */
+    * query's subvectors to every subspace centroid, one
+    * [[graft.expressions.VectorKernels.adcTable]] call per query row (the
+    * broadcast side). */
   private[operators] def qtabFor(qv: Column, cbs: Seq[Seq[Array[Double]]]): Column = {
-    val subDim = cbs.head.head.length
-    val lit3 = cbLit(cbs)
-    transform(sequence(lit(0), lit(cbs.size - 1)), s =>
-      transform(element_at(lit3, s + 1), c =>
-        l2sq(slice(qv, s * subDim + 1, lit(subDim)), c)))
+    val (set, subDim) = codebooks(cbs)
+    toCol(VectorCalls.adcTable(toExpr(qv), set, subDim))
   }
 
   /** Deterministic per-subspace L2 k-means codebooks (same recipe as
@@ -104,7 +79,7 @@ object Pq {
     * subspace sharing a single oversample collect):
     *   1. oversample 2k corpus rows by smallest xxhash64(id);
     *   2. greedy farthest-point (k-center, L2) per subspace on the driver;
-    *   3. `lloydIters` distributed Lloyd rounds: narrow literal-fold code
+    *   3. `lloydIters` distributed Lloyd rounds: narrow kernel code
     *      assignment, per-(sub, cell, dim) mean via two posexplodes —
     *      shuffle rows are (int, int, int, double), never vectors — means
     *      quantized to a 1e-9 grid to kill partition-order ulp drift;

@@ -119,11 +119,10 @@ object Quality {
           .as("alpha_word_frac"))
     // duplicate-line metrics: only (doc_id, line-hash, line-len) longs
     // shuffle; the text dies in the map-side projection
-    val lineRows = docs.select(col(idCol).as("doc_id"),
-        explode(transform(lines, l => struct(
-          graft.expressions.TextExpressions.polyHash(l).as("lh"),
-          length(l).cast("long").as("lc")))).as("x"))
-      .select(col("doc_id"), col("x.lh").as("lh"), col("x.lc").as("lc"))
+    val lineRows = docs.select(col(idCol).as("doc_id"), explode(lines).as("l"))
+      .select(col("doc_id"),
+        graft.expressions.TextExpressions.polyHash(col("l")).as("lh"),
+        length(col("l")).cast("long").as("lc"))
     val dup = lineRows.groupBy(col("doc_id"), col("lh"))
       .agg(count(lit(1)).as("n"), max(col("lc")).as("lc"))
       .groupBy(col("doc_id"))

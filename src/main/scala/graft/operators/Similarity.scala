@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.expressions.{toCol, toExpr, VectorCalls, VectorKernels, VectorSet}
 
 /** Embedding similarity search (approximate-nearest-neighbor surface).
   *
@@ -14,18 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Sequential-fold dot product of two array<double> columns. */
-  /** Sequential-fold dot product. Spelled as the codegen'd
-    * [[graft.expressions.VectorDot]] kernel (bit-identical IEEE fold —
-    * see VectorKernels' contract) instead of
-    * `aggregate(zip_with(a,b,(x,y)=>x*y), 0.0, +)`: higher-order
-    * functions are CodegenFallback, and the interpreted per-element fold
-    * was the dominant CPU of every cosine-scoring pass (r19 measurement:
-    * PQ/IVF training and scoring phases ~2-4 s warm at sf0.1, mostly
-    * here and in [[Pq.codesFor]]). */
-  def dot(a: Column, b: Column): Column =
-    graft.expressions.toCol(graft.expressions.VectorDot(
-      graft.expressions.toExpr(a), graft.expressions.toExpr(b)))
+  /** Sequential-fold dot product, null when the lengths differ or an
+    * element is null (bit-identical to `aggregate(zip_with(a,b,*), 0.0, +)`,
+    * see VectorKernels' contract). */
+  def dot(a: Column, b: Column): Column = toCol(VectorCalls.dot(toExpr(a), toExpr(b)))
 
   def norm(v: Column): Column = sqrt(dot(v, v))
 
@@ -82,28 +75,19 @@ object Similarity {
       }
     }
 
-  /** Signed-random-projection LSH bucket id (one bit per hyperplane).
-    *
-    * The whole plane matrix is ONE typedLit literal (a single Catalyst
-    * node) folded with `aggregate` — NOT numPlanes × dim individual
-    * `lit()` expressions, which would bloat the plan the same way inlined
-    * centroids did (see [[cellFor]]); 64 planes × 1024 dims would be 65k
-    * Literal nodes. Same 2^22-double guard as the centroid literal: beyond
-    * ~32 MB of plan-side data a literal matrix is the wrong tool. */
+  /** Signed-random-projection LSH bucket id (bit p iff dot(v, plane p) > 0):
+    * one [[graft.expressions.VectorKernels.lshBits]] call per row over the
+    * plane matrix as one [[VectorSet]] literal. Past [[LiteralDoubleLimit]]
+    * plane doubles this fails fast; [[withBuckets]] dispatches to the join. */
   def lshBucket(v: Column, ps: Seq[Array[Double]]): Column = {
     val planeDoubles = ps.iterator.map(_.length.toLong).sum
     require(planeDoubles <= LiteralDoubleLimit,
-      s"plane matrix too large for literal inlining ($planeDoubles doubles " +
-        s"> 2^22); use lshBucketsJoined / knnLsh, which dispatch to the " +
-        s"broadcast-join bucket computation past this limit")
-    // each entry carries its precomputed bit value (1L << planeIndex) so
-    // the fold is a pure add — no variable-distance shift expression needed
-    val mat = typedLit(ps.zipWithIndex.map { case (w, p) =>
-        (1L << p, w.toSeq) })
-      .cast("array<struct<bit:bigint,w:array<double>>>")
-    aggregate(mat, lit(0L), (acc, pl) =>
-      acc + when(dot(v, pl.getField("w")) > 0, pl.getField("bit"))
-        .otherwise(lit(0L)))
+      s"plane matrix too large for a plan-side literal ($planeDoubles " +
+        s"doubles > 2^22); use lshBucketsJoined / knnLsh, which dispatch to " +
+        s"the broadcast-join bucket computation past this limit")
+    toCol(VectorCalls.lshBits(toExpr(v), new VectorSet(
+      ps.indices.map(_.toLong).toArray, ps.map(_.clone()).toArray,
+      new Array[Double](ps.size), null)))
   }
 
   /** Bucket computation for plane matrices too large to inline as a
@@ -124,7 +108,7 @@ object Similarity {
     corpus.join(bits, "id")
   }
 
-  /** Corpus with a `bucket` column: literal fold below `literalLimit` total
+  /** Corpus with a `bucket` column: literal kernel below `literalLimit` total
     * plane doubles, broadcast-join fallback above. */
   def withBuckets(corpus: DataFrame, ps: Seq[Array[Double]],
       literalLimit: Long = LiteralDoubleLimit): DataFrame =
@@ -134,18 +118,25 @@ object Similarity {
 
   /** Driver-side centroid: id, vector, precomputed norm. Centroid sets are
     * tiny by construction (k ≤ a few thousand · dim doubles), so holding
-    * them on the driver and folding them into a literal is the scale-safe
+    * them on the driver and passing them as one literal is the scale-safe
     * spelling — the alternative (a condition-less broadcast join + per-id
     * window) multiplies the corpus ×k and shuffles every embedding. */
   final case class Cent(cid: Long, cv: Array[Double], cnrm: Double)
 
-  /** Literal-inlining budget: past ~2^22 doubles (~32 MB of plan-side data)
-    * a typedLit matrix bloats analysis/serialization; the join-backed
-    * fallbacks ([[assignCellsJoined]], [[lshBucketsJoined]]) take over. */
+  /** Plan-side budget: past ~2^22 doubles (~32 MB) a [[VectorSet]] literal
+    * bloats the plan and every task, so the join-backed fallbacks
+    * ([[assignCellsJoined]], [[lshBucketsJoined]]) take over. */
   val LiteralDoubleLimit: Long = 1L << 22
 
   private def centDoubles(cents: Seq[Cent]): Long =
     cents.iterator.map(_.cv.length.toLong).sum
+
+  /** Centroids in ascending cid as a flat [[VectorSet]]. */
+  private def centSet(cents: Seq[Cent]): VectorSet = {
+    val s = cents.sortBy(_.cid)
+    new VectorSet(s.map(_.cid).toArray, s.map(_.cv.clone()).toArray,
+      s.map(_.cnrm).toArray, null)
+  }
 
   /** Centroid set as a (cid, cv, cnrm) DataFrame for the join-backed path. */
   private def centsDf(corpus: DataFrame, cents: Seq[Cent]): DataFrame = {
@@ -172,7 +163,7 @@ object Similarity {
     corpus.join(best, "id")
   }
 
-  /** Corpus with a `cell` column: literal argmax fold below
+  /** Corpus with a `cell` column: the literal argmax kernel below
     * `literalLimit` total centroid doubles, broadcast-join fallback above. */
   def assignCells(corpus: DataFrame, cents: Seq[Cent],
       literalLimit: Long = LiteralDoubleLimit): DataFrame =
@@ -192,7 +183,7 @@ object Similarity {
   /** Group count minimizing per-row work at [[GroupProbes]] probes: the
     * row scores m coarse centers plus ~probes·k/m fine members, and
     * m = ⌈2√k⌉ balances the two terms at ~4√k total — the knob that turns
-    * the flat fold's n·k into n·O(√k). */
+    * the flat argmax's n·k into n·O(√k). */
   def centroidGroupCount(k: Int): Int =
     math.max(1, math.ceil(2.0 * math.sqrt(math.max(0, k).toDouble)).toInt)
 
@@ -208,12 +199,8 @@ object Similarity {
     val sorted = cents.sortBy(_.cid).toIndexedSeq
     if (sorted.isEmpty) return (Seq.empty, Map.empty)
     val m = math.max(1, math.min(numGroups, sorted.size))
-    def dotA(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }; s
-    }
     def cosTo(c: Cent, gv: Array[Double], gn: Double): Double =
-      if (c.cnrm * gn > 0) dotA(c.cv, gv) / (c.cnrm * gn) else 0.0
+      if (c.cnrm * gn > 0) VectorKernels.dotOf(gv, c.cv) / (c.cnrm * gn) else 0.0
     var centers: IndexedSeq[(Array[Double], Double)] =
       (0 until m).map { j =>
         val c = sorted((j.toLong * sorted.size / m).toInt); (c.cv, c.cnrm)
@@ -242,7 +229,7 @@ object Similarity {
           }
           var d = 0
           while (d < dim) { mean(d) /= mem.size; d += 1 }
-          (mean, math.sqrt(dotA(mean, mean)))
+          (mean, math.sqrt(VectorKernels.dotOf(mean, mean)))
         }
       }
       assign = assignAll()
@@ -256,22 +243,9 @@ object Similarity {
     (groups, cid2gid)
   }
 
-  /** Two-level argmax-cosine cell id in ONE narrow projection: score the
-    * coarse group centers, keep the top `nProbe` by (cos DESC, gid), and
-    * run the flat argmax fold ([[cellFor]] semantics: ties to the
-    * smallest cid) over just those groups' fine members. Per-row work is
-    * m + nProbe·k/m dot products instead of k. With nProbe ≥ m every
-    * member is scanned and the result is IDENTICAL to [[cellFor]]
-    * (spec-pinned); below that the assignment is the deterministic
-    * two-level rule a cross-engine oracle replays from the (cid, gid) and
-    * (gid, gv, gn) side-tables — argmax fidelity vs the flat fold depends
-    * on corpus cluster structure, which is the standard IVF trade every
-    * billion-scale vector system makes (cell assignment is itself a
-    * heuristic partition, not a correctness contract). */
-  /** The (gcos DESC, gid ASC) probe-ranking comparator — ONE definition
-    * shared by the literal fold and the joined fallback, because their
-    * bitwise equality is the spec-pinned dispatch contract: a tie-break
-    * edited in one spelling but not the other would silently break it. */
+  /** The (gcos DESC, gid ASC) probe ranking of the joined fallback; the
+    * literal kernel ranks non-null cosines the same way, and the two paths'
+    * bitwise equality is spec-pinned, so edit a tie-break in both. */
   private val byGcosDescGid: (Column, Column) => Column = (l, r) =>
     when(l.getField("gcos") > r.getField("gcos"), lit(-1))
       .when(l.getField("gcos") < r.getField("gcos"), lit(1))
@@ -279,42 +253,22 @@ object Similarity {
       .when(l.getField("gid") > r.getField("gid"), lit(1))
       .otherwise(lit(0))
 
-  private def bucketedCellFor(v: Column, nrm: Column, groups: Seq[CentGroup],
-      members: Map[Long, Seq[Cent]], nProbe: Int): Column = {
-    val gLit = typedLit(groups.sortBy(_.gid).map { g =>
-        (g.gid, g.gv.toSeq, g.gn,
-          members.getOrElse(g.gid, Seq.empty).sortBy(_.cid)
-            .map(c => (c.cid, c.cv.toSeq, c.cnrm)))
-      })
-      .cast("array<struct<gid:bigint,gv:array<double>,gn:double," +
-        "members:array<struct<cid:bigint,cv:array<double>,cnrm:double>>>>")
-    // score/sort only (gcos, gid) pairs — the members arrays (all k·dim
-    // doubles) stay put in the literal and are gathered AFTER the probe
-    // list is known, so the per-row sort payload is 2m scalars, not the
-    // whole centroid matrix
-    val scored = transform(gLit, g => struct(
-      cosine(v, nrm, g.getField("gv"), g.getField("gn")).as("gcos"),
-      g.getField("gid").as("gid")))
-    val probeGids = transform(slice(array_sort(scored, byGcosDescGid),
-      1, nProbe), s => s.getField("gid"))
-    val accType = "struct<best:double,cid:bigint>"
-    // bind the probe-gid list once (the shingleHashesAll idiom) so the
-    // member gather filters against a materialized array
-    element_at(transform(array(probeGids), pg =>
-      aggregate(
-        flatten(transform(
-          filter(gLit, g => array_contains(pg, g.getField("gid"))),
-          g => g.getField("members"))),
-        struct(lit(Double.NegativeInfinity).as("best"), lit(-1L).as("cid"))
-          .cast(accType),
-        (acc, c) => {
-          val cs = cosine(v, nrm, c.getField("cv"), c.getField("cnrm"))
-          when(cs > acc.getField("best") ||
-              (cs === acc.getField("best") &&
-                c.getField("cid") < acc.getField("cid")),
-            struct(cs.as("best"), c.getField("cid").as("cid")).cast(accType))
-            .otherwise(acc)
-        })), 1).getField("cid")
+  /** Two-level argmax-cosine cell id in ONE narrow projection: score the
+    * coarse group centers, keep the top `nProbe` by (cos DESC, gid), and
+    * take the argmax (cos DESC, cid) over those groups' members — one
+    * [[graft.expressions.VectorKernels.argmaxCosine]] call per row, m +
+    * nProbe·k/m dot products instead of k. With nProbe ≥ m the result is
+    * IDENTICAL to [[cellFor]] (spec-pinned); below that it is the
+    * deterministic two-level rule an oracle replays from the side-tables,
+    * the standard IVF trade. */
+  private[operators] def bucketedCellFor(v: Column, nrm: Column,
+      groups: Seq[CentGroup], members: Map[Long, Seq[Cent]],
+      nProbe: Int): Column = {
+    val gs = groups.sortBy(_.gid)
+    val set = new VectorSet(gs.map(_.gid).toArray, gs.map(_.gv.clone()).toArray,
+      gs.map(_.gn).toArray,
+      gs.map(g => centSet(members.getOrElse(g.gid, Seq.empty))).toArray)
+    toCol(VectorCalls.argmaxCosine(toExpr(v), toExpr(nrm), set, nProbe))
   }
 
   /** Corpus with a `cell` column assigned through a CALLER-SUPPLIED group
@@ -350,21 +304,21 @@ object Similarity {
     * list (n·nProbe rows), equi-join the broadcast CENTROID table by gid
     * (n·nProbe·k/m scoring rows, never materialized past the map side),
     * and collapse back to one (id, cell) with a map-side `max_by` whose
-    * (cos, −cid) key reproduces the literal fold's smallest-cid
-    * tie-break. Same rule, same fold arithmetic, same tie-breaks as
+    * (cos, −cid) key reproduces the literal kernel's smallest-cid
+    * tie-break. Same rule, same arithmetic, same tie-breaks as
     * [[bucketedCellFor]] — bitwise equal output for corpora meeting the
     * `prepared()` contract this whole family assumes: ids UNIQUE and
     * NON-NULL (an id-keyed aggregate cannot assign two duplicate-id rows
     * independently the way a per-row projection can, and a NULL id never
     * matches the re-attach join). Rows whose probed groups carry no
-    * members keep the literal fold's degenerate cell = −1 via the LEFT
+    * members keep the literal kernel's degenerate cell = −1 via the LEFT
     * re-attach below rather than vanishing. */
   def assignCellsGroupedJoined(corpus: DataFrame, cents: Seq[Cent],
       groups: Seq[CentGroup], cidToGid: Map[Long, Long],
       nProbe: Int = GroupProbes): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    // empty centroid set: same degenerate contract as the literal fold
-    // (aggregate over nothing keeps the init acc) — every row cell = -1
+    // empty centroid set: same degenerate contract as the literal kernel
+    // (no candidate) — every row cell = -1
     if (groups.isEmpty || cents.isEmpty)
       return corpus.withColumn("cell", lit(-1L))
     val spark = corpus.sparkSession
@@ -394,7 +348,7 @@ object Similarity {
       .agg(max_by(col("cid"), struct(col("cos"), -col("cid"))).as("cell"))
     // LEFT + coalesce: a row whose probed groups had no members (possible
     // only with caller-supplied degenerate groupings) keeps the literal
-    // fold's cell = -1 instead of silently vanishing from the corpus
+    // kernel's cell = -1 instead of silently vanishing from the corpus
     corpus.join(best.withColumnRenamed("cell", "__cell"), Seq("id"), "left")
       .withColumn("cell", coalesce(col("__cell"), lit(-1L)))
       .drop("__cell")
@@ -402,9 +356,9 @@ object Similarity {
 
   /** Bucketed cell assignment with groups derived on the spot
     * ([[groupCentroids]] at [[centroidGroupCount]] groups): the n·k flat
-    * fold becomes n·O(√k) — the term that made auto-k SemDeDup's
+    * argmax becomes n·O(√k) — the term that made auto-k SemDeDup's
     * assignment quadratic in n (k ∝ n at constant cell size; the sf1
-    * probe measured the flat fold at ×4.6 wall per 10× data at the demo
+    * probe measured the flat argmax at ×4.6 wall per 10× data at the demo
     * cell size). Use [[assignCellsGrouped]] when the caller needs the
     * group structure itself (oracle side-tables). */
   def assignCellsBucketed(corpus: DataFrame, cents: Seq[Cent],
@@ -421,40 +375,19 @@ object Similarity {
     assignCellsGrouped(corpus, cents, groups, cid2gid, nProbe)
   }
 
-  /** Argmax-cosine cell id as ONE narrow projection over a literal centroid
-    * array: an `aggregate` fold keeping the best (cosine, cid) pair. No row
-    * multiplication, no shuffle — the corpus never moves for assignment.
-    * Tie-break: centroids fold in ascending cid with a strict `>`, so ties
-    * keep the smallest cid (same as the old window's `cos desc, cid`). */
-  private def cellFor(v: Column, nrm: Column, cents: Seq[Cent]): Column = {
-    // The whole centroid set is ONE typedLit literal (plan-side data, a
-    // single Catalyst node), not k·dim individual Literal expressions —
-    // inlining thousands of centroids × hundreds of dims as separate
-    // literals makes analysis/codegen pathologically slow or fail. The cast
-    // renames the tuple fields to the names the fold below reads. Guard:
-    // beyond ~4M doubles (32 MB in the plan) a literal centroid table is the
-    // wrong tool — fail fast rather than silently degrade the driver.
-    val sorted = cents.sortBy(_.cid)
-    val nDoubles = centDoubles(sorted)
+  /** Argmax-cosine cell id (ties to the smallest cid, −1 without a
+    * non-null cosine) as ONE narrow projection: the two-level kernel with
+    * every centroid in one group at full probe. No row multiplication, no
+    * shuffle — the corpus never moves for assignment. */
+  private[operators] def cellFor(v: Column, nrm: Column,
+      cents: Seq[Cent]): Column = {
+    val nDoubles = centDoubles(cents)
     require(nDoubles <= LiteralDoubleLimit,
-      s"centroid set too large for literal inlining ($nDoubles doubles > " +
+      s"centroid set too large for a plan-side literal ($nDoubles doubles > " +
         s"2^22); use assignCellsJoined / knnIvfFrom, which dispatch to the " +
         s"broadcast-join cell assignment past this limit")
-    val centArr = typedLit(sorted.map(c => (c.cid, c.cv.toSeq, c.cnrm)))
-      .cast("array<struct<cid:bigint,cv:array<double>,cnrm:double>>")
-    // both branches cast to one explicit type: field aliases inside lambda
-    // bodies don't survive analysis, and literal-vs-computed nullability
-    // would otherwise make the CASE branches mismatch
-    val accType = "struct<best:double,cid:bigint>"
-    aggregate(centArr,
-      struct(lit(Double.NegativeInfinity).as("best"), lit(-1L).as("cid"))
-        .cast(accType),
-      (acc, c) => {
-        val cs = cosine(v, nrm, c.getField("cv"), c.getField("cnrm"))
-        when(cs > acc.getField("best"),
-          struct(cs.as("best"), c.getField("cid").as("cid")).cast(accType))
-          .otherwise(acc)
-      }).getField("cid")
+    bucketedCellFor(v, nrm, Seq(CentGroup(0L, Array.emptyDoubleArray, 0.0)),
+      Map(0L -> cents), 1)
   }
 
   /** IVF-style ANN: partition the corpus into cells by nearest centroid,
@@ -494,34 +427,22 @@ object Similarity {
       lloydIters: Int): Seq[Cent] = kmeansDriver(corpus, k, lloydIters)
 
   /** [[kmeansCentroidsSeq]] with the Lloyd assignment forced to the flat
-    * n·k fold regardless of k — a probe hook only, so Sf1Probe can
+    * n·k argmax regardless of k — a probe hook only, so Sf1Probe can
     * measure the flat-vs-bucketed Lloyd term side by side at a
     * production-scale k instead of trusting the complexity argument. */
   private[graft] def kmeansCentroidsSeqFlat(corpus: DataFrame, k: Int,
       lloydIters: Int): Seq[Cent] =
     kmeansDriver(corpus, k, lloydIters, Some(assignCells(_, _)))
 
-  /** Top-`p` centroid cells by cosine, as an array of cids — the nProbe
-    * probe list. Same literal centroid array as [[cellFor]]; the sort is a
-    * per-row array_sort over ≤ |cents| scored structs. */
+  /** Top-`p` cids by (cosine desc, cid asc), a null cosine last as in the
+    * joined path's window — the nProbe probe list, one
+    * [[graft.expressions.VectorKernels.topCosine]] call per query row. */
   private[operators] def cellsFor(v: Column, nrm: Column, cents: Seq[Cent],
-      p: Int): Column = {
-    val sorted = cents.sortBy(_.cid)
-    val centArr = typedLit(sorted.map(c => (c.cid, c.cv.toSeq, c.cnrm)))
-      .cast("array<struct<cid:bigint,cv:array<double>,cnrm:double>>")
-    val scoredArr = transform(centArr, c =>
-      struct(cosine(v, nrm, c.getField("cv"), c.getField("cnrm")).as("cos"),
-        c.getField("cid").as("cid")))
-    val byCosDesc = array_sort(scoredArr, (l, r) =>
-      when(l.getField("cos") > r.getField("cos"), lit(-1))
-        .when(l.getField("cos") < r.getField("cos"), lit(1))
-        .when(l.getField("cid") < r.getField("cid"), lit(-1))
-        .otherwise(lit(1)))
-    transform(slice(byCosDesc, 1, p), s => s.getField("cid"))
-  }
+      p: Int): Column =
+    toCol(VectorCalls.topCosine(toExpr(v), toExpr(nrm), centSet(cents), p))
 
   /** Shared IVF machinery: assign every corpus row to its max-cosine
-    * centroid cell ([[assignCells]] — narrow literal fold below
+    * centroid cell ([[assignCells]] — narrow literal kernel below
     * `literalLimit` total centroid doubles, broadcast-join fallback above),
     * then score queries against their `nProbe` nearest cells. The probe
     * expansion happens on the TINY broadcast query side — the corpus never
@@ -531,8 +452,7 @@ object Similarity {
   def knnIvfFrom(corpus: DataFrame, cents: Seq[Cent],
       queryIds: Seq[Long], k: Int, nProbe: Int = 1,
       literalLimit: Long = LiteralDoubleLimit): DataFrame = {
-    // empty corpus → empty centroid set → empty result (a zero-length
-    // literal centroid array would not analyze inside the fold)
+    // empty corpus → empty centroid set → empty result
     if (cents.isEmpty)
       return corpus.select(col("id").as("query_id"),
         col("id").as("neighbor_id"), lit(0.0).as("cosine")).limit(0)
@@ -549,7 +469,7 @@ object Similarity {
       else {
         // probe list via the same broadcast centroid table: rank cells per
         // query by (cos desc, cid) — identical ordering to cellsFor's
-        // array_sort comparator — and keep the top nProbe
+        // kernel (DESC puts a null cosine last) — and keep the top nProbe
         val qscored = qrows.join(broadcast(centsDf(corpus, cents)))
           .select(col("query_id"), col("qv"), col("qn"), col("cid"),
             cosine(col("qv"), col("qn"), col("cv"), col("cnrm")).as("cos"))
@@ -582,7 +502,7 @@ object Similarity {
     *   3. LLOYD rounds distributedly: broadcast centroids, assign by max
     *      cosine, recompute cell means via a posexplode + per-(cell,dim)
     *      avg — two narrow shuffles per round, corpus never collected.
-    * Returns (cid, cv, cnrm) ready for [[knnIvfWith]]. */
+    * Returns (cid, cv, cnrm) ready for [[knnIvfFrom]]. */
   def kmeansCentroids(corpus: DataFrame, k: Int, lloydIters: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -593,7 +513,7 @@ object Similarity {
 
   /** k threshold above which the Lloyd rounds default to the bucketed
     * two-level assignment: per-row cost is ~4√k dot products vs the flat
-    * fold's k, so the crossover where the two-level dispatch pays for
+    * argmax's k, so the crossover where the two-level dispatch pays for
     * itself is k ≈ 16 (4√16 = 16); 64 leaves margin for the grouping and
     * probe-sort overhead (at k = 64 bucketed does ~32 dots vs 64 flat,
     * at k = 4096 ~256 vs 4096). Every oracle gate trains at k below
@@ -632,13 +552,11 @@ object Similarity {
     // empty corpus → empty centroid set (knnIvfFrom short-circuits to an
     // empty result) — layout/empty-input invariance over throwing
     if (cand.isEmpty) return Seq.empty
-    // 2. greedy k-center on the driver (cosine distance), start from the
-    // candidate with the largest norm (deterministic tie-break by order)
-    def cos(a: (Array[Double], Double), b: (Array[Double], Double)): Double = {
-      var s = 0.0; var i = 0
-      while (i < a._1.length) { s += a._1(i) * b._1(i); i += 1 }
-      s / (a._2 * b._2)
-    }
+    // 2. greedy k-center on the driver (cosine distance), starting from the
+    // first candidate (the smallest xxhash64(id)); maxBy keeps the first of
+    // equally far candidates
+    def cos(a: (Array[Double], Double), b: (Array[Double], Double)): Double =
+      VectorKernels.dotOf(b._1, a._1) / (a._2 * b._2)
     val picked = scala.collection.mutable.ArrayBuffer(cand.head)
     while (picked.length < math.min(k, cand.length)) {
       val next = cand.maxBy(c => -picked.map(p => cos(c, p)).max) // farthest
@@ -647,7 +565,7 @@ object Similarity {
     var cents: Seq[Cent] = picked.zipWithIndex.map { case ((v, n), i) =>
       Cent(i.toLong, v, n)
     }.toSeq
-    // 3. Lloyd rounds: narrow argmax assignment (flat literal fold below
+    // 3. Lloyd rounds: narrow argmax assignment (flat literal kernel below
     // LloydBucketedMinK, the n·O(√k) bucketed two-level rule above — see
     // `assign`; no join, no window on the literal paths), then a
     // per-(cell,dim) mean via a two-stage reduce. Each round collects only
@@ -740,7 +658,7 @@ object Similarity {
     * standard shape when single-table collision probability is low (weakly
     * clustered corpora, where nearest-neighbor angles approach random).
     *
-    * Scale shape: the per-table buckets are narrow literal folds over ONE
+    * Scale shape: the per-table buckets are narrow literal kernels over ONE
     * corpus scan; the (table, bucket) index explodes corpus ×L as a
     * streamed projection feeding a broadcast hash join with the probe set
     * (never materialized, never shuffled). Only the matched candidate rows
@@ -788,7 +706,7 @@ object Similarity {
     * cell instead of n² — at corpus scale k grows ∝ n so cells stay
     * constant-size, and the only vector-carrying shuffle is the ONE
     * hash-partition by cell feeding the self-join (cell assignment itself
-    * is a narrow literal fold, [[assignCells]]). Everything after the
+    * is a narrow literal kernel, [[assignCells]]). Everything after the
     * cosine filter moves (id, id) longs only. Cells come from the caller
     * ([[kmeansCentroidsSeq]] for learned, or any Cent seq) so a gate can
     * hand the exact centroid table to a cross-engine oracle.
@@ -945,7 +863,7 @@ object Similarity {
     * (Σ|cell|² ≈ n·targetCellSize). Cell ASSIGNMENT — both the Lloyd
     * rounds inside training and the final pass — goes through
     * [[assignCellsBucketed]], so each pass is n·O(√k) dot products
-    * instead of the flat fold's n·k = n²/targetCellSize (the term the
+    * instead of the flat argmax's n·k = n²/targetCellSize (the term the
     * sf1 probe measured at ×4.6 wall per 10× data at the demo cell size
     * when assignment was flat). Every term is now linear or O(n^1.5 /
     * √targetCellSize), and the √k term has a ~35× advantage over flat at

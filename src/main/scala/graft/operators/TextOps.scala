@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.types._
-import graft.expressions.{toCol, toExpr, ShingleGrams, VectorKernels}
+import graft.expressions.{toCol, toExpr, ShingleGrams, StringCalls, VectorKernels}
 import graft.expressions.TextExpressions.polyHash
 
 /** Shared primitives for the LLM-training-data pipeline operators (dedup,
@@ -13,7 +13,7 @@ import graft.expressions.TextExpressions.polyHash
   * over arrays — whole-stage codegen'd, no UDFs, no driver-side state — so
   * the operators scale linearly with partitions on a real cluster.
   *
-  * Cross-engine determinism: hashes are [[graft.expressions.PolyHash]]
+  * Cross-engine determinism: hashes are [[graft.expressions.StringKernels.polyHash]]
   * (mod 1e9+7), folds are sequential left-folds, and every constant below is
   * shared with the generated DuckDB oracle SQL.
   */
@@ -33,38 +33,18 @@ object TextOps {
   /** Whitespace tokens (documents are single-space separated). */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Word k-shingles, space-joined. (Kept for callers that need the gram
-    * TEXT; the hash-only paths below never materialize these strings.) */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = tokens(text)
-    transform(sequence(lit(0), size(toks) - k),
-      i => concat_ws(" ", slice(toks, i + 1, lit(k))))
-  }
+  /** The polyHash of every whitespace token, in order (one
+    * [[graft.expressions.StringKernels.tokenHashes]] call per row). */
+  def tokenHashes(text: Column): Column =
+    toCol(StringCalls.tokenHashes(toExpr(text)))
 
-  /** All k-shingle hashes IN ORDER (with multiplicity), via token-hash
-    * combination: each token is PolyHash'd exactly once, then the shingle
-    * hash is the left fold h = (h·31 + tokHash) mod P over its k token
-    * hashes. Overlapping shingles therefore share the per-char work
-    * instead of re-hashing the joined string k times over, and no gram
-    * string is ever materialized — the hot path of every dedup /
-    * fingerprint / decontamination operator is pure long arithmetic
-    * inside codegen. Caller must guarantee ≥ k tokens (a negative
-    * sequence length flips direction).
-    *
-    * The token-hash array is bound ONCE per row via a single-element
-    * transform (the [[jaccard]] idiom): lambda bodies are not
-    * subexpression-eliminated, so referencing the hash-array expression
-    * directly from inside the per-shingle lambda would re-hash every token
-    * for each of the k·(n−k+1) element_at calls — O(k·n²) per document
-    * instead of O(n + k·n). */
+  /** All k-shingle hashes IN ORDER (with multiplicity): each token is
+    * polyHash'd once, then a shingle hash is the left fold
+    * h = (h·31 + tokHash) mod P over its k token hashes, so no gram string
+    * is materialized — two kernel calls per row ([[tokenHashes]], then
+    * [[ShingleGrams]]). Fewer than k tokens gives no grams. */
   def shingleHashesAll(text: Column, k: Int): Column =
-    // Codegen'd kernel (r19): the old single-element-transform binding ran
-    // the k-step fold as interpreted lambda evals per gram (HOFs are
-    // CodegenFallback). ShingleGrams runs the identical (h·31+tok) % P
-    // left fold in one kernel call per row; the per-token polyHash
-    // transform stays (already one kernel call per token).
-    toCol(ShingleGrams(toExpr(transform(tokens(text), t => polyHash(t))),
-      k, PolyMod))
+    toCol(ShingleGrams(toExpr(tokenHashes(text)), k, PolyMod))
 
   /** Distinct k-shingle hash set — the dedup signature. */
   def shingleHashes(text: Column, k: Int): Column =
@@ -86,11 +66,10 @@ object TextOps {
     * same contract as [[shingleHashesAll]]'s other callers). Overlapping
     * windows re-selecting one gram collapse via DISTINCT.
     *
-    * Scale design: the whole selection is ONE narrow per-document array
-    * pass (token hashes → gram hashes → per-window argmin via a reversed
-    * array_position, all inside transform lambdas — no explode until the
-    * selected fingerprints, ~2n/(w+1) rows per doc); the only shuffle is
-    * the final DISTINCT on (doc_id, pos, fp) longs. Text never moves. */
+    * Scale design: the whole selection is ONE narrow per-document pass of
+    * kernel calls (token hashes → gram hashes → per-window argmin), no
+    * explode until the selected fingerprints (~2n/(w+1) rows per doc); the
+    * only shuffle is the final DISTINCT on (doc_id, pos, fp) longs. */
   def winnowingFingerprints(docs: DataFrame, textCol: String, idCol: String,
       k: Int, w: Int): DataFrame = {
     require(k >= 1 && w >= 1, s"need k >= 1 and w >= 1, got k=$k w=$w")
@@ -98,14 +77,9 @@ object TextOps {
     val withG = docs
       .filter(size(tokens(col(textCol))) >= k)
       .select(col(idCol).as("doc_id"), grams.as("__g"))
-    // Per-window rightmost-min via the VectorKernels.winnowSelect kernel: one
-    // call per row emitting the (fp, pos) selection of every window —
-    // x <= best takes the later occurrence on ties, which is exactly
-    // array_min + rightmost array_position, with zero per-window array
-    // allocations and no interpreted lambda steps (the r18 spelling built
-    // a slice AND its reverse per window and scanned them three times;
-    // that was the whole CPU cost of the spans gate, guide §1.2
-    // "per-task work").
+    // Per-window rightmost-min (x <= best takes the later occurrence on
+    // ties, i.e. array_min + rightmost array_position): one
+    // VectorKernels.winnowSelect call per row, no per-window arrays.
     withG
       .select(col("doc_id"), explode(winnowSelect(col("__g"), w)).as("__s"))
       .select(col("doc_id"), col("__s.pos").as("pos"), col("__s.fp").as("fp"))
@@ -201,22 +175,17 @@ object TextOps {
     * identical → 1.0 (the denominator is 0 exactly then, and ANSI double
     * division would throw instead of yielding a similarity). */
   def jaccard(a: Column, b: Column): Column =
-    // Codegen'd kernel (r19): the old single-element-transform binding of
-    // |∩| made the whole verify subtree interpreted (transform is
-    // CodegenFallback) — at 548k candidate pairs per jaccard gate that
-    // WAS the verify cost. VectorKernels.jaccardLong mirrors the expression
-    // exactly: array_intersect distinct-count, raw sizes in the denominator,
+    // VectorKernels.jaccardLong mirrors the expression exactly:
+    // array_intersect distinct-count, raw sizes in the denominator,
     // empty-vs-empty → 1.0 before any division (the ANSI divide guard).
     toCol(StaticInvoke(classOf[VectorKernels], DoubleType, "jaccardLong",
       Seq(toExpr(a), toExpr(b)), Seq(ArrayType(LongType), ArrayType(LongType)),
       returnNullable = false))
 
   /** 30-bit SimHash over the distinct token-hash set: bit b is set when
-    * Σ_tokens (±1 by hash bit b) > 0. Codegen'd kernel (r19): the old
-    * spelling ran 30 interpreted aggregate folds per row; the kernel
-    * mirrors it exactly including the null corners (null element votes
-    * −1, null array yields 0 — the expression was non-nullable), so the
-    * null array reaches the kernel and the column is non-nullable. */
+    * Σ_tokens (±1 by hash bit b) > 0, one kernel call per row with the
+    * replaced fold's null corners (a null element votes −1, a null array
+    * gives 0), so the column is non-nullable. */
   def simHash30(hashes: Column): Column =
     toCol(StaticInvoke(classOf[VectorKernels], LongType, "simHash30",
       Seq(toExpr(hashes)), Seq(ArrayType(LongType)), propagateNull = false,
@@ -333,7 +302,7 @@ object TextOps {
     * sample with p_l ∝ n_l^α; also the LLaMA corpus-weighting shape).
     * Each domain d with n_d documents gets weight w_d = ⌊√n_d⌋ and a
     * target of `targetDocs`·w_d/Σw documents; a document is kept iff
-    * PolyHash(text) mod [[SampleMod]] falls under the integer threshold
+    * polyHash(text) mod [[SampleMod]] falls under the integer threshold
     * min(SampleMod, ⌊SampleMod·targetDocs·w_d / (Σw·n_d)⌋) — ONE exact
     * integer division, so a rare domain whose real target is fractional
     * (targetDocs·w_d < Σw) still gets its proportional keep rate instead
@@ -354,7 +323,7 @@ object TextOps {
     *
     * Scale design: the statistics pass is ONE (domain, count) partial/final
     * aggregate; thresholds are |domains| rows, broadcast back; the keep
-    * decision is a narrow codegen filter (PolyHash in place) — the corpus
+    * decision is a narrow codegen filter (polyHash in place) — the corpus
     * text never shuffles, and the decision is a pure function of the row
     * and the domain histogram (reproducible across runs and layouts). */
   def sqrtTemperatureKeep(docs: DataFrame, domainCol: String,

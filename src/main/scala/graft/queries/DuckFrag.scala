@@ -8,13 +8,13 @@ import graft.operators.TextOps._
   */
 object DuckFrag {
 
-  /** PolyHash of a string expression (mirrors StringKernels.polyHash). */
+  /** polyHash of a string expression (mirrors StringKernels.polyHash). */
   def polyHashSql(expr: String): String =
     s"CAST(list_reduce(list_prepend(0, list_transform(regexp_split_to_array($expr,''), " +
       s"c -> CAST(unicode(c) AS BIGINT))), (a,c) -> (a*31+c) % $PolyMod) AS BIGINT)"
 
   /** One k-shingle hash at 1-based token offset `i` of token list `w`:
-    * left fold h = (h·31 + PolyHash(token)) mod P over the k tokens
+    * left fold h = (h·31 + polyHash(token)) mod P over the k tokens
     * (mirrors TextOps.shingleHashesAll's token-hash combination). */
   def shingleHashAtSql(k: Int): String =
     (0 until k).foldLeft("CAST(0 AS BIGINT)") { (acc, j) =>

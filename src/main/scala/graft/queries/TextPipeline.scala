@@ -674,7 +674,7 @@ object TextPipeline {
              |FROM ranked, n WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin)),
 
     // Deterministic content-hash train/val/test split (80/10/10): the
-    // assignment depends only on the text (PolyHash mod 100), so it is
+    // assignment depends only on the text (polyHash mod 100), so it is
     // reproducible across engines, runs, and partitionings — and exact
     // duplicates always land in the same split (no train/val leakage).
     "q_pipe_split" -> Q(
@@ -1017,7 +1017,7 @@ object TextPipeline {
       },
       Some(realEmbedPngOracleSql)),
 
-    // Document fingerprinting: whole-doc PolyHash + min 5-shingle rolling
+    // Document fingerprinting: whole-doc polyHash + min 5-shingle rolling
     // hash (winnowing-style content fingerprint, stable under reordering of
     // documents but not of content).
     // Cross-document duplicated-span coverage (ExactSubstr signal at k-gram

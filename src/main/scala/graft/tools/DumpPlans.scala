@@ -57,14 +57,14 @@ object DumpPlans {
       "q_pipe_dedup_minhash" -> ("banded LSH: only (band,key,id) through the " +
         "explode shuffle; signatures persisted once"),
       "q_sim_knn_lsh" -> ("multi-table OR-construction: per-table buckets " +
-        "as narrow literal folds over ONE scan, (table,bucket) posexplode " +
+        "as narrow literal-kernel calls over ONE scan, (table,bucket) posexplode " +
         "streamed into a broadcast hash equi-join; only candidate rows " +
         "(longs+double) reach the dedup aggregate's exchange"),
       "q_sim_knn_lsh_mp" -> ("9-bit/Hamming<=3 multi-probe: 130-mask probe " +
         "expansion on the broadcast QUERY side only; corpus joins by " +
         "bucket equality, never shuffles"),
       "q_sim_knn_ivf" -> "centroid broadcast; per-id cell resolve; cell probe",
-      "q_sim_knn_ivf_learned" -> ("learned k-means|| centroids folded as ONE " +
+      "q_sim_knn_ivf_learned" -> ("learned k-means|| centroids passed as ONE " +
         "literal; narrow argmax cell assignment (no join/window for assign); " +
         "nProbe=2 expansion on the broadcast query side only"),
       "q_sim_knn_ivf_learned_k64" -> ("k=64 training through the DEFAULT " +
@@ -127,7 +127,7 @@ object DumpPlans {
       "q_pipe_dedup_keep_best" -> ("quality-preferring keeper: component-" +
         "keyed row_number window + group join — (id, keeper, score) " +
         "tuples shuffle, text never does"),
-      "q_sim_knn_pq" -> ("PQ-ADC: corpus encoded by a narrow fold over the " +
+      "q_sim_knn_pq" -> ("PQ-ADC: corpus encoded by one narrow kernel call over the " +
         "codebook literal (no join/shuffle to encode); per-query distance " +
         "tables computed on the tiny broadcast side; scoring is m table " +
         "lookups per pair — full vectors never meet the join"),
@@ -135,7 +135,7 @@ object DumpPlans {
         "id-join fetches only rerank·|queries| full vectors; queries stay " +
         "broadcast in both the ADC and the re-rank joins"),
       "q_sim_knn_pq_prod" -> ("the PRODUCTION PQ point: m=16/32-cent " +
-        "codebook literal encodes in one narrow fold; re-rank breadth " +
+        "codebook literal encodes in one narrow kernel call; re-rank breadth " +
         "max(8k, ceil sqrt n) — SUBLINEAR in the corpus, so the exact " +
         "id-join fetches a vanishing fraction of n (vs the gate-only " +
         "ceil(2n/5) fraction above)"),
@@ -306,7 +306,7 @@ object DumpPlans {
         "aggregates keyed by user + two hash joins back — all shuffles " +
         "carry (long, long) tuples; the flag is a narrow int64 projection"),
       "q_sim_knn_ivfpq" -> ("IVF-PQ: cell assignment + residual encoding " +
-        "are ONE narrow literal-fold projection over the corpus scan; " +
+        "are ONE narrow literal-kernel projection over the corpus scan; " +
         "probe expansion and per-(query,cell) ADC tables on the broadcast " +
         "side; candidate join is an equi-join on cell carrying only " +
         "(id, cell, codes); exact re-rank fetches rerank·|queries| " +
@@ -356,13 +356,13 @@ object DumpPlans {
       "q_sim_semdedup_auto" -> ("SemDeDup with k derived from ONE corpus " +
         "count (ceil(n/targetCellSize)) and BUCKETED assignment: the " +
         "argmax runs over the top-4 coarse groups' members (one narrow " +
-        "literal-fold projection — n*O(sqrt(k)) dots instead of n*k, in " +
+        "literal-kernel projection — n*O(sqrt(k)) dots instead of n*k, in " +
         "Lloyd rounds AND the final pass; no join, no shuffle for " +
         "assignment), then the fixed-k gate's plan family (cell-bounded " +
         "intra-cluster equi-join, cell-keyed components); cell count " +
         "grows with n so the pair kernel stays linear where fixed k " +
         "measured 22x at 10x data, and the sqrt(k) assignment holds the " +
-        "sf1 probe at x2.2 where the flat fold read x4.6"),
+        "sf1 probe at x2.2 where the flat argmax read x4.6"),
       "q_sim_knn_matryoshka" -> ("matryoshka adaptive retrieval: ONE " +
         "narrow corpus scan scores the 40-dim PREFIX (r18 sweep point; " +
         "broadcast-query non-equi scan, allowlisted BNLJ like " +

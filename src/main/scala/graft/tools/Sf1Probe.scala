@@ -382,7 +382,7 @@ object Sf1Probe {
     lloyd(sf01, 128, flat = false) // warm
     val lbBase = lloyd(sf01, 128, flat = false)
     val lbScaled = lloyd(sf1, 128, flat = false)
-    lloyd(sf01, 128, flat = true) // warm the flat literal-fold codegen
+    lloyd(sf01, 128, flat = true) // warm the flat literal-kernel codegen
     val lfScaled = lloyd(sf1, 128, flat = true)
     println(f"[probe] lloyd k=128 bucketed: sf0.1 $lbBase%6.2fs | " +
       f"sf1 $lbScaled%6.2fs | x${lbScaled / lbBase}%.1f time | " +

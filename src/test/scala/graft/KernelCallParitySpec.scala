@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.expressions.{toCol, toExpr, ShingleGrams, StringCalls, StringKernels, UserKernels, VectorKernels}
+import graft.expressions.{toCol, toExpr, ShingleGrams, StringCalls, StringKernels, UserKernels, VectorCalls, VectorKernels, VectorSet}
 import graft.functions.UdfSurface
-import graft.operators.{Pq, TextOps}
+import graft.operators.{Pq, Similarity, TextOps}
 
 /** Every kernel built as a `StaticInvoke`, evaluated both ways: interpreted
   * (`eval`, which finds the kernel method by reflection from the argument
@@ -39,6 +39,26 @@ class KernelCallParitySpec extends SparkTestBase {
     arr(0.5, -1.0, 2.0), arr(1.0, 2.0), arr(1.0, null, 3.0))
   private val longs: Seq[ArrayData] = Seq(null, arr(), arr(1L, 2L, 3L),
     arr(3L, 4L, 5L, 6L, 7L, 8L), arr(1L, null, 2L), arr(5L, 5L, 1000000006L))
+
+  private val norms: Seq[Any] = Seq(null, 0.0, -0.0, 1.5, Double.NaN)
+
+  /** Planes, centroids, groups and codebooks for the vector kernels. */
+  private def flat(ids: Seq[Long], vecs: Seq[Array[Double]]): VectorSet =
+    new VectorSet(ids.toArray, vecs.toArray,
+      vecs.map(v => math.sqrt(v.map(x => x * x).sum)).toArray, null)
+  private val planes = flat(Seq(0L, 1L, 2L),
+    Seq(Array(1.0, 0.0, 0.0), Array(-1.0, 1.0, 1.0), Array(0.5, 0.5)))
+  private val cents = flat(Seq(3L, 7L, 9L),
+    Seq(Array(1.0, 2.0, 3.0), Array(0.5, -1.0, 2.0), Array(1.0, 2.0)))
+  private val groups = new VectorSet(Array(0L, 1L),
+    Array(Array(1.0, 2.0, 3.0), Array(-1.0, 0.0, 0.0)), Array(math.sqrt(14), 1.0),
+    Array(flat(Seq(3L, 9L), Seq(Array(1.0, 2.0, 3.0), Array(1.0, 2.0))),
+      flat(Seq(7L), Seq(Array(0.5, -1.0, 2.0)))))
+  private val codebooks = new VectorSet(Array(0L, 1L),
+    Array(Array.emptyDoubleArray, Array.emptyDoubleArray), Array(0.0, 0.0),
+    Array(flat(Seq(0L, 1L), Seq(Array(1.0), Array(-0.5))),
+      flat(Seq(0L, 1L, 2L), Seq(Array(2.0), Array(0.0), Array(2.5)))))
+  private def nrm(r: Seq[Any]): Double = if (r(1) == null) 0.0 else r(1).asInstanceOf[Double]
 
   private val S = StringType
   private val AD = ArrayType(DoubleType)
@@ -69,7 +89,9 @@ class KernelCallParitySpec extends SparkTestBase {
       ("swapCase", StringCalls.swapCase(_), StringKernels.swapCase(_)),
       ("zfill(6)", StringCalls.zfill(_, 6), StringKernels.zfill(_, 6)),
       ("wrap(4)", StringCalls.wrap(_, 4), StringKernels.wrap(_, 4)),
-      ("deflateLen(6)", StringCalls.deflateLen(_, 6), StringKernels.deflateLen(_, 6))) ++
+      ("deflateLen(6)", StringCalls.deflateLen(_, 6), StringKernels.deflateLen(_, 6)),
+      ("polyHash", StringCalls.polyHash(_), StringKernels.polyHash(_)),
+      ("tokenHashes", StringCalls.tokenHashes(_), StringKernels.tokenHashes(_))) ++
     Seq("NFC", "NFD", "NFKC", "NFKD").map(f => (s"normalize($f)",
       (e: Expression) => StringCalls.normalize(e, f),
       (s: UTF8String) => StringKernels.normalize(s, java.text.Normalizer.Form.valueOf(f)))) ++
@@ -119,7 +141,29 @@ class KernelCallParitySpec extends SparkTestBase {
       Case("shingleGrams(2)", Seq(AL), xs => ShingleGrams(xs.head, 2, TextOps.PolyMod),
         r => VectorKernels.shingleGrams(ad(r, 0), 2, TextOps.PolyMod), rows1(longs)),
       Case("winnowSelect(2)", Seq(AL), column(TextOps.winnowSelect(_, 2)),
-        r => VectorKernels.winnowSelect(ad(r, 0), 2), rows1(longs)))
+        r => VectorKernels.winnowSelect(ad(r, 0), 2), rows1(longs)),
+      Case("dot", Seq(AD, AD), columns(Similarity.dot),
+        r => VectorKernels.dot(ad(r, 0), ad(r, 1)), rows2(doubles, doubles)),
+      Case("lshBits", Seq(AD), xs => VectorCalls.lshBits(xs.head, planes),
+        r => VectorKernels.lshBits(ad(r, 0), planes), rows1(doubles),
+        propagateNull = false),
+      Case("topCosine(2)", Seq(AD, DoubleType),
+        xs => VectorCalls.topCosine(xs(0), xs(1), cents, 2),
+        r => VectorKernels.topCosine(ad(r, 0), nrm(r), r(1) == null, cents, 2),
+        rows2(doubles, norms), propagateNull = false),
+      Case("argmaxCosine(1)", Seq(AD, DoubleType),
+        xs => VectorCalls.argmaxCosine(xs(0), xs(1), groups, 1),
+        r => VectorKernels.argmaxCosine(ad(r, 0), nrm(r), r(1) == null, groups, 1),
+        rows2(doubles, norms), propagateNull = false),
+      Case("argmaxCosine(full)", Seq(AD, DoubleType),
+        xs => VectorCalls.argmaxCosine(xs(0), xs(1), groups, 2),
+        r => VectorKernels.argmaxCosine(ad(r, 0), nrm(r), r(1) == null, groups, 2),
+        rows2(doubles, norms), propagateNull = false),
+      Case("pqEncode", Seq(AD), xs => VectorCalls.pqEncode(xs.head, codebooks, 1),
+        r => VectorKernels.pqEncode(ad(r, 0), codebooks, 1), rows1(doubles)),
+      Case("adcTable", Seq(AD), xs => VectorCalls.adcTable(xs.head, codebooks, 1),
+        r => VectorKernels.adcTable(ad(r, 0), codebooks, 1), rows1(doubles),
+        propagateNull = false))
 
   /** A value in a form `==` compares by content: strings as bytes, arrays
     * and structs as Seqs. */
@@ -164,7 +208,7 @@ class KernelCallParitySpec extends SparkTestBase {
       "graft_rfind(s, p)", "graft_partition(s, p, 2)", "graft_rpartition(s, p, 0)",
       "graft_rsplit(s, p, 1)", "graft_is(s, 'alpha')", "graft_casefold(s)",
       "graft_normalize(s, 'NFKD')", "graft_zfill(s, 6)", "graft_wrap(s, 4)",
-      "graft_swapcase(s)")
+      "graft_swapcase(s)", "graft_polyhash(s)")
     val query = s"SELECT s, p, ${calls.zipWithIndex.map { case (c, i) => s"$c AS c$i" }
       .mkString(", ")} FROM kcp_texts"
     def run(confs: (String, String)*): Seq[Seq[Any]] = {

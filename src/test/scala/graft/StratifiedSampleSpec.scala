@@ -17,7 +17,7 @@ class StratifiedSampleSpec extends SparkTestBase {
         Map("en" -> 0.5, "de" -> 0.1), defaultRate = 0.0))
       .groupBy($"lang").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // 1000 docs per stratum; PolyHash is uniform enough for ±40%
+    // 1000 docs per stratum; polyHash is uniform enough for ±40%
     assert(kept("en") > 300 && kept("en") < 700, s"en=${kept("en")}")
     assert(kept("de") > 40 && kept("de") < 160, s"de=${kept("de")}")
   }
